@@ -754,7 +754,10 @@ object VectorOps {
     *
     *  - BUCKETED: the probed cells map to their `cell % B` bucket dirs
     *    — a STATIC partition prune bounded by B literals no matter how
-    *    many cells exist — then the in-bucket cell filter SIZE-
+    *    many cells exist, whose dirs are resolved per generation by a
+    *    direct file-system listing ([[graft.sources.Sinks.prunedPartitionRead]])
+    *    so a store with more than 32 buckets per generation never pays
+    *    a distributed listing per request — then the in-bucket cell filter SIZE-
     *    DISPATCHES (VERDICT r13 directive 2): up to
     *    `graft.ivf.isinMaxCells` (default 128) probed cells it is a
     *    literal In(cell, ...) pushed into the parquet scan (a row-group
@@ -784,9 +787,10 @@ object VectorOps {
     assertAsOfServable(fs, indexDir, asOf)
     val scan = graft.sources.Sinks.layoutMarkerOpt(fs, indexDir) match {
       case Some(b) =>
-        val base = spark.read.parquet(indexDir)
-        assertMarkerCellType(fs, indexDir, base)
         val bks = probed.map(c => (((c % b) + b) % b).toInt).distinct.sorted
+        val base = graft.sources.Sinks.prunedPartitionRead(
+          spark, indexDir, "cell_bucket", bks, asOf)
+        assertMarkerCellType(fs, indexDir, base)
         val bucketPruned = base.where(col("cell_bucket").isin(bks: _*))
         val isinMax = spark.conf.getOption("graft.ivf.isinMaxCells")
           .map(_.toInt).getOrElse(128)
@@ -842,14 +846,14 @@ object VectorOps {
     assertAsOfServable(fs, indexDir, asOf)
     graft.sources.Sinks.layoutMarkerOpt(fs, indexDir) match {
       case Some(b) =>
-        val base = spark.read.parquet(indexDir)
-        assertMarkerCellType(fs, indexDir, base)
         // distinct BUCKETS from the frame — ≤ B rows by construction
         val bks = cells
           .select(pmod(col("cell"), lit(b.toLong)).cast("int").as("cb"))
           .distinct().collect().map(_.getInt(0)).sorted
-        val bucketPruned = base
-          .where(col("cell_bucket").isin(bks.map(Integer.valueOf): _*))
+        val base = graft.sources.Sinks.prunedPartitionRead(
+          spark, indexDir, "cell_bucket", bks, asOf)
+        assertMarkerCellType(fs, indexDir, base)
+        val bucketPruned = base.where(col("cell_bucket").isin(bks: _*))
         // re-select the scan's column order: a USING join hoists the
         // key first, and this arm must be drop-in equal to the array
         // form (prunedCellScan's discipline)

@@ -661,9 +661,7 @@ object EventQueries extends QueryPack {
               org.apache.spark.sql.types.LongType))))
         val postings = s.read.parquet(s"$idx/postings")
           .where(col("tb").isin(buckets.map(Integer.valueOf): _*))
-        val pplan = postings.queryExecution.executedPlan.toString
-        val servedPruned = pplan.contains("PartitionFilters: [") &&
-          pplan.contains("tb") && pplan.contains(" IN (")
+        val servedPruned = graft.sources.Sinks.scansPrunedOn(postings, "tb")
         val stats = s.read.parquet(s"$idx/stats")
           .agg((sum(col("sum_dl")).cast("double") /
             sum(col("n")).cast("double")).as("avgdl"),

@@ -101,7 +101,12 @@ object TextQueries extends QueryPack {
     * buckets, so serve I/O tracks the query's posting lists and df
     * partials, never the corpus (df is vocab-sized — small next to
     * postings, but a full scan per query is still O(vocab) I/O serve
-    * has no right to). df partials sum per token at serve time (the
+    * has no right to). Both reads resolve the probed `tb=` dirs of
+    * every generation by a direct file-system listing first
+    * ([[graft.sources.Sinks.prunedPartitionRead]]), so a request never
+    * pays Spark's distributed listing of all 64 bucket dirs per
+    * generation; dl and stats still list one dir per generation. df
+    * partials sum per token at serve time (the
     * t28 additive layout; a fresh t27 index is the single-partial
     * case), tokens summing to ≤0 drop (post-takedown ghosts, t29),
     * and stats partials reduce to avgdl = sum(sum_dl)/sum(n) — exact
@@ -156,17 +161,15 @@ object TextQueries extends QueryPack {
           org.apache.spark.sql.types.StringType))))
       .withColumn("tb", pmod(hash(col("token")), lit(64)))
     val buckets = termsDf.select("tb").collect().map(_.getInt(0))
-      .distinct.sorted.map(Integer.valueOf)
-    val dfRead = genPrune(s.read.parquet(s"$idx/df")
-      .where(col("tb").isin(buckets: _*)))
-    val postings = genPrune(s.read.parquet(s"$idx/postings")
-      .where(col("tb").isin(buckets: _*)))
-    def prunedPlan(df: org.apache.spark.sql.DataFrame): Boolean = {
-      val p = df.queryExecution.executedPlan.toString
-      p.contains("PartitionFilters: [") && p.contains("tb") &&
-        p.contains(" IN (")
-    }
-    val served_pruned = prunedPlan(postings) && prunedPlan(dfRead)
+      .distinct.sorted
+    def probedRead(t: String): org.apache.spark.sql.DataFrame =
+      genPrune(graft.sources.Sinks.prunedPartitionRead(
+          s, s"$idx/$t", "tb", buckets, asOf)
+        .where(col("tb").isin(buckets: _*)))
+    val dfRead = probedRead("df")
+    val postings = probedRead("postings")
+    val served_pruned = graft.sources.Sinks.scansPrunedOn(postings, "tb") &&
+      graft.sources.Sinks.scansPrunedOn(dfRead, "tb")
     val qdf = dfRead.join(broadcast(termsDf.select("token")), "token")
       .groupBy("token").agg(sum("df").as("df"))
       .where(col("df") > 0)

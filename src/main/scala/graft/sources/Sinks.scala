@@ -524,9 +524,10 @@ object Sinks {
     * <partitionCol>=.../` generation — written to a hidden tmp sibling
     * first, then published with ONE atomic dir rename. A replayed
     * batchId is a pure skip (its gen dir exists) and a crashed
-    * half-write is invisible (hidden tmp). Readers list the index root:
-    * partition discovery surfaces (gen, partitionCol), pruning on the
-    * partition column prunes inside every generation, and `gen` is
+    * half-write is invisible (hidden tmp). Serving readers resolve only
+    * the probed `<partitionCol>=` dirs of every visible generation
+    * ([[prunedPartitionRead]]) and read them with the root as base path,
+    * so discovery still surfaces (gen, partitionCol) and `gen` is
     * dropped before use. The commit discipline behind the streaming
     * IVF maintenance (s16, via VectorOps.committedCellAppend) and the
     * bucketed band index (d16).
@@ -553,6 +554,78 @@ object Sinks {
     */
   def committedAppend(df: DataFrame, indexDir: String, batchId: Long): Boolean =
     committedGenWrite(df, indexDir, batchId, None, preClustered = true)
+
+  /** The serving read of a partitioned store, generational
+    * (`gen=<id>/<partCol>=<v>/`) or flat (`<partCol>=<v>/`), restricted
+    * to the probed partition `values` BEFORE Spark lists anything: the
+    * root is listed once through the Hadoop FileSystem, the visible `gen=` dirs with
+    * gen ≤ `asOf` are kept (a flat store uses the root itself), each is
+    * listed once for the `<partCol>=<v>` dirs that exist, and only those
+    * leaf dirs are read, with `basePath = root` so `gen` and `partCol`
+    * are discovered from the paths with the same types as a whole-root
+    * read. A whole-root read of a store with more than 32 partition dirs
+    * per generation (Spark's parallel-discovery threshold) starts one
+    * distributed listing job per generation per request; this read
+    * starts none while it resolves to at most 32 leaf dirs.
+    *
+    * Callers keep their partition filter and `gen` horizon: the rows
+    * are the whole-root read's under those filters. When no probed dir
+    * exists it falls back to the whole-root read, where the caller's
+    * filter answers empty with the store's schema. A root holding both
+    * `gen=` dirs and other visible children refuses, as Spark's
+    * discovery does ("conflicting directory structures").
+    */
+  def prunedPartitionRead(spark: SparkSession, root: String, partCol: String,
+                          values: Iterable[Int],
+                          asOf: Option[Long] = None): DataFrame = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    // Spark's hidden-path rule: `_x` (not a partition dir) and `.x`
+    def visible(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).filter { st =>
+        val n = st.getPath.getName
+        !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+      }
+    val children =
+      if (fs.exists(rootP)) visible(rootP)
+      else Array.empty[org.apache.hadoop.fs.FileStatus]
+    val (gens, others) = children.partition(st =>
+      st.isDirectory && st.getPath.getName.startsWith("gen="))
+    if (gens.nonEmpty && others.nonEmpty)
+      throw new IllegalStateException(
+        s"conflicting directory structures under $root: gen= dirs next to " +
+          others.map(_.getPath.getName).sorted.mkString(", ") +
+          " — a store is either generational or flat, never both")
+    val wanted = values.map(v => s"$partCol=$v").toSet
+    def probed(sts: Array[org.apache.hadoop.fs.FileStatus]) =
+      sts.filter(st => st.isDirectory && wanted(st.getPath.getName))
+        .map(_.getPath.toString)
+    val leaves =
+      if (gens.isEmpty) probed(children)
+      else gens
+        .filter(st => asOf.forall(st.getPath.getName.stripPrefix("gen=").toLong <= _))
+        .flatMap(st => probed(visible(st.getPath)))
+    if (leaves.isEmpty) spark.read.parquet(root)
+    else spark.read.option("basePath", root).parquet(leaves.sorted.toSeq: _*)
+  }
+
+  /** Did every file scan of `df`'s executed plan prune on the partition
+    * column `partCol`? Read from the scans' `partitionFilters`, so the
+    * answer holds whatever shape the optimizer gave the predicate
+    * (`OptimizeIn` turns a one-value list into `=` and a list of more
+    * than 10 values into `INSET`).
+    */
+  private[graft] def scansPrunedOn(df: DataFrame, partCol: String): Boolean = {
+    val scans = PlanWalk.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    scans.nonEmpty && scans.forall(_.partitionFilters.exists(
+      _.references.exists(_.name == partCol)))
+  }
+
+  private object PlanWalk
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   /** Cluster a frame on its inner partition column before a
     * `partitionBy` write (round-15, guide §6 small files + §2.4): an

@@ -29,6 +29,11 @@ import org.apache.spark.sql.functions._
   * discipline — a probe that silently measured only the cheap rungs
   * would understate the curve).
   *
+  * Each BM25 serve also prints `listing_jobs=`: the Spark jobs it
+  * started for distributed file listing (Spark lists a directory level
+  * with more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * = 32 children as a job of its own).
+  *
   * Run: `sbt "runMain graft.tools.GenLayoutProbe [maxGens]"`.
   */
 object GenLayoutProbe {
@@ -36,6 +41,43 @@ object GenLayoutProbe {
   private def time[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime(); val r = f
     (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Run `f` and count the jobs it started that are Spark's distributed
+    * file listing (job description "Listing leaf files and directories
+    * ..."). `f` runs under a fresh job group; a marker job submitted
+    * after it drains the listener queue, since the bus delivers job
+    * starts in submission order.
+    */
+  def countListingJobs[T](spark: SparkSession)(f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"listing-count-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val listing = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties)
+             if p.getProperty("spark.jobGroup.id") == group) {
+          val desc = Option(p.getProperty("spark.job.description")).getOrElse("")
+          if (desc == marker) drained.countDown()
+          else if (desc.startsWith("Listing leaf files")) listing.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = f
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(0), 1).count()
+      require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener queue did not drain within 60 s")
+      (r, listing.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   /** fixed-size synthetic batch for generation g: 40 docs, 8 tokens
@@ -79,6 +121,15 @@ object GenLayoutProbe {
     (files, t)
   }
 
+  /** the timed 3-term BM25 serve every rung measures, with its
+    * listing-job count
+    */
+  private def serve(s: SparkSession, idx: String): ((Long, Double), Int) =
+    countListingJobs(s)(time {
+      graft.queries.TextQueries
+        .bm25Serve(s, idx, Seq("tok1", "tok7", "tok39"), 10).count()
+    })
+
   /** fixed-size keep-list batch: 30 fresh docs for generation g, each
     * band-linked to ONE prior doc so the remap closure stays live
     * (every batch merges into standing groups) without growing
@@ -118,12 +169,10 @@ object GenLayoutProbe {
         val perGen = tAppend / math.max(1, g - landed)
         landed = g
         val (files, tList) = coldList(spark, s"$idx/postings")
-        val (_, tServe) = time {
-          graft.queries.TextQueries
-            .bm25Serve(spark, idx, Seq("tok1", "tok7", "tok39"), 10).count()
-        }
+        val ((_, tServe), lists) = serve(spark, idx)
         println(f"GENPROBE bm25 gens=$g%4d append=$perGen%6.3fs/gen " +
-          f"postings_files=$files%5d cold_list=$tList%6.3fs serve=$tServe%6.3fs")
+          f"postings_files=$files%5d cold_list=$tList%6.3fs serve=$tServe%6.3fs " +
+          f"listing_jobs=$lists%d")
         if (overBudget) {
           println(s"GENPROBE bm25 BUDGET EXCEEDED at gens=$g — larger " +
             "rungs SKIPPED (curve rises; do not read absence as flat)")
@@ -133,12 +182,10 @@ object GenLayoutProbe {
       // fold to one generation; the same serve after
       val (_, tFold) = time(graft.queries.TextQueries.compactBm25(spark, idx))
       val (files, tList) = coldList(spark, s"$idx/postings")
-      val (_, tServe) = time {
-        graft.queries.TextQueries
-          .bm25Serve(spark, idx, Seq("tok1", "tok7", "tok39"), 10).count()
-      }
+      val ((_, tServe), lists) = serve(spark, idx)
       println(f"GENPROBE bm25 POST-FOLD from=$landed%4d fold=$tFold%6.3fs " +
-        f"postings_files=$files%5d cold_list=$tList%6.3fs serve=$tServe%6.3fs")
+        f"postings_files=$files%5d cold_list=$tList%6.3fs serve=$tServe%6.3fs " +
+        f"listing_jobs=$lists%d")
     }
 
     // ---------------- keep-list band store ----------------
