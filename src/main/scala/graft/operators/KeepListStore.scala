@@ -180,8 +180,13 @@ object KeepListStore {
     var cur = remap.persist(lvl)
     var done = false
     while (!done) {
-      val stepped = cur.join(
-          cur.select(col("old_rep").as("__o"), col("keep_id").as("__k")),
+      // each round starts from a leaf over the cached rows: joining the
+      // map with itself doubles its plan every round otherwise, and AQE
+      // renders the whole plan string on every stage update (a 200-deep
+      // chain ran the heap out that way)
+      val base = cur.sparkSession.createDataFrame(cur.rdd, cur.schema)
+      val stepped = base.join(
+          base.select(col("old_rep").as("__o"), col("keep_id").as("__k")),
           col("keep_id") === col("__o"), "left")
         .select(col("old_rep"),
           coalesce(col("__k"), col("keep_id")).as("keep_id"),

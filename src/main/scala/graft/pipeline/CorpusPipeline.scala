@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.{ExtractUdfs, Extractors, PeopleExtractors}
@@ -14,13 +14,16 @@ import graft.sources.{Ingest, Sinks}
   *
   *   landing dir → payload preference → clean → deterministic ids →
   *   sections → per-section child tables (citations, judgments,
-  *   composition) → idempotent keyed writes.
+  *   composition, participation, lower court, people) → one keyed
+  *   landing of all eight tables.
   *
   * The reference's per-spider loop, progress files and chunked cursors
-  * disappear: partitioning replaces chunks, `Sinks.upsertBucketed`
-  * replaces delete-then-insert, and re-runs are no-op rewrites of the
-  * same key buckets (so the cron-driven incremental intent of
-  * `main.py:88` is just "run it again").
+  * disappear: partitioning replaces chunks, one concurrent keyed landing
+  * per wave ([[landWave]], `Sinks.upsertKeyed`) replaces its per-chunk
+  * delete-then-insert on the chunk's decision ids, and re-runs are
+  * no-op rewrites of the same key buckets (so the cron-driven
+  * incremental intent of `main.py:88` is just "run it again").
+  * `CorpusStream` lands each micro-batch through the same [[landWave]].
   */
 object CorpusPipeline {
 
@@ -56,7 +59,10 @@ object CorpusPipeline {
     * caller).
     */
   def ingest(spark: SparkSession, landingDir: String, minChars: Int = 50): DataFrame =
-    Ingest.fileTriples(spark, landingDir)
+    ingestTriples(Ingest.fileTriples(spark, landingDir), minChars)
+
+  private def ingestTriples(triples: DataFrame, minChars: Int): DataFrame =
+    triples
       .withColumn("html_paras", htmlParasUdf(col("html_raw")))
       .withColumn("pdf_paras", pdfParasUdf(col("pdf_raw")))
       .withColumn("raw_paras",
@@ -166,38 +172,76 @@ object CorpusPipeline {
   case class RunReport(nIngested: Long, nSections: Long, nCitations: Long,
                        judgmentCoverage: Double, nSkipped: Long = 0L)
 
+  /** What a landed wave counted while it wrote: its documents (and so
+    * its sections, a 1:1 projection of them), its citation rows and its
+    * documents with at least one judgment outcome.
+    */
+  private[graft] final case class Landed(nDocs: Long, nCitations: Long, nCovered: Long)
+
+  /** A wave's eight tables by store name, over its cached `docs` and
+    * `sectioned` frames. `cited` and `covered` observe the citation rows
+    * and the documents with a judgment outcome as the wave writes them.
+    */
+  private[graft] def waveTables(spark: SparkSession, docs: DataFrame, sectioned: DataFrame,
+                                spider: String, cited: Observation,
+                                covered: Observation): Seq[(String, DataFrame)] =
+    Seq(
+      "documents" -> docs,
+      "sections" -> sectioned,
+      "citations" -> citations(sectioned).observe(cited, count(lit(1)).as("n")),
+      "judgments" -> judgments(sectioned)
+        .observe(covered, count_if(size(col("outcomes")) > 0).as("n")),
+      "compositions" -> compositions(sectioned, spider),
+      "participations" -> participations(sectioned, spider),
+      "lower_courts" -> lowerCourts(sectioned),
+      "people" -> people(spark, sectioned))
+
+  /** Land one wave's eight tables under `outDir` in one concurrent pass
+    * (`Sinks.upsertKeyed`) keyed on the wave's decision ids: each table
+    * loses every old row of those ids and gains the new ones, the
+    * reference's per-decision delete-then-insert — so a redelivered
+    * ruling that no longer yields a citation or a person keeps none of
+    * its old ones. `docs` and `sectioned` are the caller's persisted
+    * caches; the key pass materializes both (sectioned reads docs), and
+    * every child frame is evaluated once, by its own write. The landing
+    * returns only after every write settled, so the caller may then
+    * unpersist the caches.
+    */
+  private[graft] def landWave(spark: SparkSession, docs: DataFrame, sectioned: DataFrame,
+                              outDir: String, spider: String): Landed = {
+    val cited, covered = Observation()
+    val n = Sinks.upsertKeyed(sectioned.select("decision_id"), "decision_id", 16,
+      waveTables(spark, docs, sectioned, spider, cited, covered)
+        .map { case (t, df) => s"$outDir/$t" -> df })
+    // no documents: nothing was written, so nothing was observed
+    if (n == 0) Landed(0L, 0L, 0L)
+    else Landed(n, observed(cited), observed(covered))
+  }
+
+  /** An observed count; a frame no partition of which ran reports none. */
+  private def observed(o: Observation): Long =
+    o.get.get("n").fold(0L)(_.asInstanceOf[Long])
+
   /** Full run: landing dir → parquet tables under `outDir`, idempotent
-    * per decision_id; returns coverage metrics (§5 style).
+    * per decision_id; returns coverage metrics (§5 style), all counted
+    * by the passes the wave makes anyway.
     */
   def run(spark: SparkSession, landingDir: String, outDir: String,
           spider: String = "default"): RunReport = {
-    val docs = ingest(spark, landingDir).persist()
+    // skipped = landing triples that produced no ingestable text
+    // (undecodable payloads / under the min-chars gate) — the
+    // reference logs these per file (`text_to_database.py`); here the
+    // count is part of the run report instead of a log line
+    val triples = Observation()
+    val docs = ingestTriples(Ingest.fileTriples(spark, landingDir)
+      .observe(triples, count(lit(1)).as("n")), 50).persist()
     try {
       val sectioned = splitSections(docs, spider).persist()
       try {
-        val jd = judgments(sectioned)
-        Sinks.upsertBucketed(docs, s"$outDir/documents", "decision_id", 16)
-        Sinks.upsertBucketed(sectioned, s"$outDir/sections", "decision_id", 16)
-        Sinks.upsertBucketed(citations(sectioned), s"$outDir/citations", "decision_id", 16)
-        Sinks.upsertBucketed(jd, s"$outDir/judgments", "decision_id", 16)
-        Sinks.upsertBucketed(compositions(sectioned, spider), s"$outDir/compositions",
-          "decision_id", 16)
-        Sinks.upsertBucketed(participations(sectioned, spider), s"$outDir/participations",
-          "decision_id", 16)
-        Sinks.upsertBucketed(lowerCourts(sectioned), s"$outDir/lower_courts",
-          "decision_id", 16)
-        Sinks.upsertBucketed(people(spark, sectioned), s"$outDir/people",
-          "decision_id", 16)
-        val n = docs.count()
-        val covered = jd.where(size(col("outcomes")) > 0).count()
-        // skipped = landing triples that produced no ingestable text
-        // (undecodable payloads / under the min-chars gate) — the
-        // reference logs these per file (`text_to_database.py`); here
-        // the count is part of the run report instead of a log line
-        val nTriples = Ingest.fileTriples(spark, landingDir).count()
-        RunReport(n, sectioned.count(), citations(sectioned).count(),
-          if (n == 0) 0.0 else covered.toDouble / n,
-          nSkipped = nTriples - n)
+        val w = landWave(spark, docs, sectioned, outDir, spider)
+        RunReport(w.nDocs, w.nDocs, w.nCitations,
+          if (w.nDocs == 0) 0.0 else w.nCovered.toDouble / w.nDocs,
+          nSkipped = observed(triples) - w.nDocs)
       } finally { sectioned.unpersist(); () }
     } finally { docs.unpersist(); () }
   }

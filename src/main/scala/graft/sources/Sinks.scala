@@ -39,17 +39,17 @@ object Sinks {
   /** Run independent write thunks as CONCURRENT Spark jobs (guide §2.6)
     * and wait for ALL of them to settle — the shared submission
     * discipline of every multi-table landing (BM25 tables, keep-list
-    * state pairs, corpus-stream upserts).
+    * state pairs, the eight tables of a corpus wave).
     *
     * Failure contract (ADVICE r15): each thunk runs under its own Spark
     * job group; the FIRST failure cancels the sibling groups' in-flight
-    * jobs and stops unstarted thunks from submitting, and the failure is
-    * rethrown only AFTER every thunk has terminated — so a caller's
-    * `finally` (typically an unpersist of the shared input cache) never
-    * runs while a sibling job still reads that cache, and no orphan job
-    * keeps writing to a store dir after the caller has unwound. (The
-    * previous `Await.result(Future.sequence(...))` failed fast and left
-    * siblings running.)
+    * jobs and stops unstarted thunks from submitting, and the root
+    * failure is rethrown only AFTER every thunk has terminated — so a
+    * caller's `finally` (typically an unpersist of the shared input
+    * cache) never runs while a sibling job still reads that cache, and
+    * no orphan job keeps writing to a store dir after the caller has
+    * unwound. (The previous `Await.result(Future.sequence(...))` failed
+    * fast and left siblings running.)
     */
   private[graft] def awaitAllWrites[T](spark: SparkSession,
                                        thunks: Seq[() => T]): Seq[T] = {
@@ -64,7 +64,9 @@ object Sinks {
     val groups = thunks.indices.map(i => s"graft-cwrite-$base-$i")
     val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
     val futs: Seq[Future[T]] = thunks.zipWithIndex.map { case (t, i) =>
-      Future {
+      // `blocking`: each thunk waits on its Spark jobs, so the pool adds
+      // threads and every thunk submits at once, whatever the core count
+      Future(scala.concurrent.blocking {
         if (aborted.get)
           throw new java.util.concurrent.CancellationException(
             "sibling concurrent write failed before this one started")
@@ -74,7 +76,7 @@ object Sinks {
         sc.setJobGroup(groups(i), s"concurrent write ${i + 1}/${thunks.size}",
           interruptOnCancel = true)
         try t() finally sc.clearJobGroup()
-      }
+      })
     }
     futs.foreach(_.failed.foreach { _ =>
       if (aborted.compareAndSet(false, true))
@@ -83,11 +85,15 @@ object Sinks {
     })
     val settled: Seq[Try[T]] = Await.result(
       Future.sequence(futs.map(_.transform(Success(_)))), Duration.Inf)
-    // rethrow the ROOT failure, not a secondary cancellation it caused
-    def isCancel(e: Throwable): Boolean =
+    // rethrow the ROOT failure, not a secondary one it caused: a thunk
+    // skipped after the abort, or a job of one of THIS call's groups
+    // cancelled by it (Spark names the group in the cancellation). A
+    // failure that merely says "cancelled" can be the root.
+    def isSecondary(e: Throwable): Boolean =
       e.isInstanceOf[java.util.concurrent.CancellationException] ||
-        (e.getMessage != null && e.getMessage.contains("cancelled"))
-    settled.collectFirst { case Failure(e) if !isCancel(e) => e }
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+          c.getMessage != null && groups.exists(c.getMessage.contains))
+    settled.collectFirst { case Failure(e) if !isSecondary(e) => e }
       .orElse(settled.collectFirst { case Failure(e) => e })
       .foreach(e => throw e)
     settled.map(_.get)
@@ -148,13 +154,31 @@ object Sinks {
 
   /** K2/K3: idempotent keyed upsert via hash-bucketed dynamic partition
     * overwrite, per-KEY semantics (the reference's delete-then-insert,
-    * `section_splitter.py:140-174`). Rows route to `numBuckets`
-    * partitions by key hash; before overwriting a touched bucket, the
-    * existing rows of that bucket whose keys are NOT in the batch are
-    * read back and carried over, so unrelated keys that happen to share
-    * a bucket survive. Only touched buckets are read or rewritten —
-    * untouched buckets are never opened, so batch cost scales with
-    * |batch| + |touched buckets|, not table size.
+    * `section_splitter.py:140-174`): the one-table case of
+    * [[upsertKeyed]], whose key set is the batch's own keys.
+    */
+  def upsertBucketed(batch: DataFrame, path: String, keyCol: String,
+                     numBuckets: Int = 64): Unit = {
+    upsertKeyed(batch.select(keyCol), keyCol, numBuckets, Seq(path -> batch))
+    ()
+  }
+
+  /** Keyed landing of several tables that share one key set: in every
+    * `(path, batch)` table, the rows whose key is in `keys` are replaced
+    * by the batch's rows (which may be none), and every other row
+    * survives. Rows route to `numBuckets` partitions by key hash; only
+    * the buckets the keys hash to are read or rewritten — untouched
+    * buckets are never opened, so a landing costs |batch| + |touched
+    * buckets|, not table size. A touched bucket left with no rows is
+    * retired, and a table left with no bucket is removed, as if never
+    * written. A batch's keys must lie in `keys`: a row in an untouched
+    * bucket is never published.
+    *
+    * The touched buckets and the key count come from ONE pass over
+    * `keys`; the same `keys` frame is every table's anti-join side, so
+    * each batch is evaluated once, by its own write. The tables' writes
+    * run concurrently through [[awaitAllWrites]]. Returns the number of
+    * `keys` rows.
     *
     * `numBuckets` is part of the table's LAYOUT CONTRACT: it must stay
     * constant for the table's lifetime (like Hive bucketing) — routing
@@ -164,36 +188,69 @@ object Sinks {
     * style read-all + fresh upsert.
     *
     * CONCURRENCY: one writer per TABLE at a time (concurrent calls on
-    * the same path race the read-merge-swap; the corpus stream runs
-    * its six tables' upserts concurrently because they are six
-    * DIFFERENT paths). Serialize same-table batches upstream — the
-    * micro-batch/foreachBatch model does this naturally.
+    * the same path race the read-merge-swap; one landing's tables are
+    * written concurrently because they are DIFFERENT paths). Serialize
+    * same-table batches upstream — the micro-batch/foreachBatch model
+    * does this naturally.
     */
-  def upsertBucketed(batch: DataFrame, path: String, keyCol: String,
-                     numBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
+  private[graft] def upsertKeyed(keys: DataFrame, keyCol: String, numBuckets: Int,
+                                 tables: Seq[(String, DataFrame)]): Long = {
+    val spark = keys.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    healUpsert(fs, path) // roll back any swap a previous run crashed in
-    val routed = batch
-      .withColumn("__bucket", pmod(xxhash64(col(keyCol)), lit(numBuckets)))
-    if (!Files.exists(Paths.get(path))) {
-      // an all-empty FIRST batch must write nothing: overwriting with
-      // zero rows leaves a schemaless dir (only _SUCCESS) that poisons
-      // every later read-back of this sink
-      if (routed.isEmpty) return
-      clusterByPartition(routed, "__bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(path)
-      return
-    }
-    val touched = routed.select("__bucket").distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return // empty batch: nothing to rewrite
-    // partition pruning keeps this read to the touched buckets only
-    val survivors = spark.read.parquet(path)
-      .where(col("__bucket").cast("long").isin(touched.toSeq: _*))
-      .withColumn("__bucket", col("__bucket").cast("long"))
-      .join(batch.select(keyCol).distinct(), Seq(keyCol), "left_anti")
+    // roll back any swap a previous landing crashed in
+    tables.foreach { case (path, _) => healUpsert(fs, path) }
+    val (nKeys, touched) = touchedBuckets(keys, keyCol, numBuckets)
+    // no keys: nothing to replace, and an empty FIRST batch must write
+    // nothing (a schemaless dir would poison every later read-back)
+    if (nKeys == 0) return 0L
+    awaitAllWrites(spark, tables.map { case (path, batch) =>
+      () => landTouched(fs, keys, keyCol, numBuckets, touched, path, batch)
+    })
+    nKeys
+  }
+
+  private def bucketOf(key: org.apache.spark.sql.Column, numBuckets: Int) =
+    pmod(xxhash64(key), lit(numBuckets))
+
+  /** (rows, distinct buckets) of `keys`, in one job: each partition
+    * reduces its keys' buckets to a set on the executor.
+    */
+  private def touchedBuckets(keys: DataFrame, keyCol: String,
+                             numBuckets: Int): (Long, Seq[Long]) = {
+    val spark = keys.sparkSession
+    import spark.implicits._
+    val parts = keys.select(bucketOf(col(keyCol), numBuckets)).as[Long]
+      .mapPartitions { it =>
+        val seen = scala.collection.mutable.HashSet.empty[Long]
+        var n = 0L
+        it.foreach { b => n += 1; seen += b }
+        Iterator((n, seen.toArray))
+      }.collect()
+    (parts.map(_._1).sum, parts.flatMap(_._2).distinct.sorted.toSeq)
+  }
+
+  /** One table of [[upsertKeyed]]: write batch ∪ surviving rows of the
+    * touched buckets to a side dir, then swap the touched buckets in.
+    */
+  private def landTouched(fs: org.apache.hadoop.fs.FileSystem, keys: DataFrame,
+                          keyCol: String, numBuckets: Int, touched: Seq[Long],
+                          path: String, batch: DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val routed = batch.withColumn("__bucket", bucketOf(col(keyCol), numBuckets))
+    val exists = Files.exists(Paths.get(path))
+    // partition pruning keeps the read to the touched buckets only; the
+    // anti-join side is the landing's key set, not this batch's keys, so
+    // a key whose new batch has no rows here loses its old ones
+    val merged =
+      if (!exists) routed
+      else routed.unionByName(storedSchema(fs, path)
+        .fold(spark.read)(s => spark.read.schema(s.add("__bucket", "long")))
+        .parquet(path)
+        .where(col("__bucket").cast("long").isin(touched: _*))
+        .withColumn("__bucket", col("__bucket").cast("long"))
+        .join(keys, Seq(keyCol), "left_anti")
+        .select(routed.columns.map(col): _*))
     // merged output goes to a SIDE temp dir: the plan reads `path` and
     // writes `tmp`, so there is no read-from-overwrite-target hazard and
     // nothing to materialize up front. (The previous localCheckpoint
@@ -201,32 +258,64 @@ object Sinks {
     // measured parity at sf0.1 (tools.UpsertProbe, medians 2.01 vs
     // 1.97 s) but a memory ceiling and an executor-loss hazard at scale;
     // this writes the data exactly once, then swaps directory entries.)
-    val tmp = path + "__upsert_tmp"
-    val old = path + "__upsert_old"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    clusterByPartition(
-        routed.unionByName(survivors.select(routed.columns.map(col): _*)),
-        "__bucket")
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmp)
+    val tmp = new org.apache.hadoop.fs.Path(path + "__upsert_tmp")
+    val old = new org.apache.hadoop.fs.Path(path + "__upsert_old")
+    val live = new org.apache.hadoop.fs.Path(path)
+    fs.delete(tmp, true)
+    clusterByPartition(merged, "__bucket")
+      .write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmp.toString)
+    def bucketDirs(p: org.apache.hadoop.fs.Path) =
+      fs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
+    if (!exists) {
+      // a first landing publishes the whole table with one rename, or
+      // nothing when its batch had no rows
+      if (bucketDirs(tmp) > 0) renameOrThrow(fs, tmp, live)
+      else fs.delete(tmp, true)
+      return
+    }
     // swap each touched bucket via rename-aside: between the two renames
     // a bucket's live dir is absent but its data sits at __upsert_old —
     // healUpsert restores it on the next call (SinksCrashSpec pins both
-    // windows). Renames are metadata-only on any rename-capable fs.
-    fs.mkdirs(new org.apache.hadoop.fs.Path(old))
+    // windows). A bucket with no merged rows is only renamed aside, so
+    // it is retired when __upsert_old is dropped. Renames are
+    // metadata-only on any rename-capable fs.
+    fs.mkdirs(old)
     for (k <- touched) {
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/__bucket=$k")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/__bucket=$k")
-      if (fs.exists(src)) {
-        if (fs.exists(dst))
-          renameOrThrow(fs, dst, new org.apache.hadoop.fs.Path(s"$old/__bucket=$k"))
-        renameOrThrow(fs, src, dst)
-      }
+      val src = new org.apache.hadoop.fs.Path(tmp, s"__bucket=$k")
+      val dst = new org.apache.hadoop.fs.Path(live, s"__bucket=$k")
+      if (fs.exists(dst)) renameOrThrow(fs, dst, new org.apache.hadoop.fs.Path(old, s"__bucket=$k"))
+      if (fs.exists(src)) renameOrThrow(fs, src, dst)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(old), true)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    if (bucketDirs(live) == 0) fs.delete(live, true)
+    fs.delete(old, true)
+    fs.delete(tmp, true)
   }
 
-  /** Crash recovery for upsertBucketed's swap: any bucket renamed aside
+  /** The data schema Spark infers for an upserted table: the row schema
+    * Spark stores in one data file's footer, the file its own inference
+    * would read, read here without the Spark job inference runs for it.
+    * None when no data file carries one.
+    */
+  private def storedSchema(fs: org.apache.hadoop.fs.FileSystem,
+                           path: String): Option[org.apache.spark.sql.types.StructType] = {
+    def visible(p: org.apache.hadoop.fs.Path) =
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    fs.listStatus(new org.apache.hadoop.fs.Path(path)).iterator
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__bucket="))
+      .flatMap(d => fs.listStatus(d.getPath).iterator.filter(f => f.isFile && visible(f.getPath)))
+      .nextOption()
+      .flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, fs.getConf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  }
+
+  /** Crash recovery for upsertKeyed's swap: any bucket renamed aside
     * whose live dir never got its replacement rolls BACK (old data is
     * consistent for a re-run — per-key idempotency reapplies the batch);
     * buckets that completed keep the new data. The partial temp dir is
@@ -235,7 +324,10 @@ object Sinks {
   private def healUpsert(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
     val old = new org.apache.hadoop.fs.Path(path + "__upsert_old")
     if (fs.exists(old)) {
-      for (st <- fs.listStatus(old)) {
+      val aside = fs.listStatus(old)
+      // a landing that removed its emptied table died before dropping old
+      if (aside.nonEmpty) fs.mkdirs(new org.apache.hadoop.fs.Path(path))
+      for (st <- aside) {
         val dst = new org.apache.hadoop.fs.Path(path + "/" + st.getPath.getName)
         // a silent rename failure here followed by the delete below
         // would destroy the only copy of the bucket — throw instead

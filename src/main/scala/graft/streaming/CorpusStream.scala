@@ -5,19 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery}
 
 import graft.pipeline.CorpusPipeline
-import graft.sources.Sinks
 
 /** Continuous corpus construction (§3.1 as a STREAM): the landing dir
   * is consumed with the Structured Streaming file source — each
   * microbatch discovers the newly landed files and routes exactly
   * those documents through the SAME batch pipeline stages (ingest →
-  * sections → judgments/citations/participations/lower courts) via
-  * `foreachBatch` + the idempotent keyed upserts. This is the
+  * sections → the eight tables) via `foreachBatch` and the batch run's
+  * own wave landing (`CorpusPipeline.landWave`). This is the
   * Spark-first replacement for the reference's cron-driven re-runs
   * (`main.py:88`): instead of "run the whole pipeline again and skip
   * what the progress files remember", new files flow through
-  * incrementally and re-delivery is absorbed by `Sinks.upsertBucketed`
-  * keyed on decision_id.
+  * incrementally and re-delivery is absorbed by the landing's
+  * per-decision replace, keyed on decision_id.
   *
   * ALL THREE file kinds drive progress (checkpointed file offsets),
   * not just the `.json` metas: the landing protocol allows a payload
@@ -75,32 +74,12 @@ object CorpusStream {
           .persist()
         try {
           val sectioned = CorpusPipeline.splitSections(docs, spider).persist()
-          try {
-            // force the shared cache ONCE before fanning out, then run
-            // the six independent table upserts CONCURRENTLY — they
-            // write disjoint paths and all read from the materialized
-            // caches, so the only serialization left is the scheduler's.
-            // A micro-batch's wall time is then max(upsert), not
-            // sum(upsert) — the same discipline a production job uses
-            // to keep per-batch latency under the trigger interval.
-            sectioned.count()
-            val writes = Seq(
-              () => Sinks.upsertBucketed(docs, s"$outDir/documents", "decision_id", 16),
-              () => Sinks.upsertBucketed(sectioned, s"$outDir/sections", "decision_id", 16),
-              () => Sinks.upsertBucketed(CorpusPipeline.citations(sectioned),
-                s"$outDir/citations", "decision_id", 16),
-              () => Sinks.upsertBucketed(CorpusPipeline.judgments(sectioned),
-                s"$outDir/judgments", "decision_id", 16),
-              () => Sinks.upsertBucketed(CorpusPipeline.participations(sectioned, spider),
-                s"$outDir/participations", "decision_id", 16),
-              () => Sinks.upsertBucketed(CorpusPipeline.lowerCourts(sectioned),
-                s"$outDir/lower_courts", "decision_id", 16))
-            // all-settled + sibling-cancel (ADVICE r15): the unpersists
-            // below must never run while failed-batch siblings still
-            // read the docs/sectioned caches
-            Sinks.awaitAllWrites(spark, writes)
-            ()
-          } finally { sectioned.unpersist(); () }
+          // the batch run's own landing: one concurrent pass over the
+          // eight tables, keyed on this micro-batch's decision ids; it
+          // returns only after every write settled, so the unpersists
+          // below never run while a write still reads the caches
+          try { CorpusPipeline.landWave(spark, docs, sectioned, outDir, spider); () }
+          finally { sectioned.unpersist(); () }
         } finally { docs.unpersist(); () }
         ()
       }

@@ -92,7 +92,9 @@ object GateProfile {
       queries.get(name) match {
         case None => println(s"PROFILE $name: NOT FOUND")
         case Some(fn) =>
-          jobs.clear(); stages.clear()
+          // `open` too: a JobEnd the bus dropped for an earlier gate must
+          // not make every later gate's drain wait out its deadline
+          jobs.clear(); stages.clear(); open.clear()
           taskTimeMs.reset(); nStages.reset(); nTasks.reset()
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)

@@ -32,17 +32,38 @@ class ScratchSweepSpec extends SparkSpec {
   }
 
   test("awaitAllWrites rethrows the root failure only after every thunk settled") {
+    val bStarted = new java.util.concurrent.CountDownLatch(1)
     val bDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom = new RuntimeException("root failure")
     val thrown = intercept[RuntimeException] {
       graft.sources.Sinks.awaitAllWrites[Unit](spark, Seq(
-        () => throw boom,
-        () => { Thread.sleep(400); bDone.set(true) }))
+        // the root throws only once its sibling runs: a sibling not yet
+        // started when the root fails is skipped, by contract
+        () => { bStarted.await(30, java.util.concurrent.TimeUnit.SECONDS); throw boom },
+        () => { bStarted.countDown(); Thread.sleep(400); bDone.set(true) }))
     }
     assert(thrown.getMessage == "root failure",
       "the ROOT failure is rethrown, not a secondary cancellation")
     assert(bDone.get,
       "the call must not return (and a caller's finally must not run) " +
         "while a sibling thunk is still executing")
+  }
+
+  test("awaitAllWrites rethrows a root failure whose message says cancelled") {
+    val sc = spark.sparkContext
+    val rootMsg = "load cancelled upstream: the source file vanished"
+    val thrown = intercept[Exception] {
+      graft.sources.Sinks.awaitAllWrites[Unit](spark, Seq(
+        // listed first: a sibling whose job the root failure cancels
+        () => sc.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(20000)),
+        () => {
+          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+          while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < deadline)
+            Thread.sleep(10)
+          throw new IllegalStateException(rootMsg)
+        }))
+    }
+    assert(thrown.getMessage == rootMsg,
+      s"the root failure must be rethrown, not the cancellation it caused: $thrown")
   }
 }

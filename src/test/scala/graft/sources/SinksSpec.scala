@@ -124,6 +124,18 @@ class SinksSpec extends SparkSpec {
     assert(rows == expected)
   }
 
+  test("upsertBucketed refuses a batch whose columns differ from the stored table") {
+    import spark.implicits._
+    val path = tmp("upsert_schema")
+    Sinks.upsertBucketed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path, "id", numBuckets = 4)
+    for (bad <- Seq(Seq((1L, "A", 9)).toDF("id", "v", "extra"), Seq((1L, "A")).toDF("id", "w")))
+      intercept[org.apache.spark.sql.AnalysisException] {
+        Sinks.upsertBucketed(bad, path, "id", numBuckets = 4)
+      }
+    assert(Sinks.readUpserted(spark, path).as[(Long, String)].collect().toSet ==
+      Set(1L -> "a", 2L -> "b"), "a refused batch leaves the table as it was")
+  }
+
   test("upsertBucketed: an all-empty first batch does not poison the sink") {
     import spark.implicits._
     val path = tmp("upsert_empty")
