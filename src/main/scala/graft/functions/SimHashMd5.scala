@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * evaluates O(32·n) interpreted higher-order lambda calls per row and
   * hex-encodes every digest; this computes one digest per token, votes
   * all 32 bits in one pass over raw bytes, and allocates nothing per
-  * token (tools.SimhashProbe measures the gap).
+  * token (PERF.md round 6, "Native simhash expression", has the gap).
   */
 object SimHashMd5 {
 

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, N
   * `array_intersect` builds a hash set per evaluation and materializes
   * the intersection array just to take its size, and on string tokens
   * each probe pays UTF8String hashing — measured 3.3× slower than the
-  * interned-int merge at sf0.1 (tools.SetSimProbe). The merge does one
-  * linear pass over the two ArrayData buffers, allocates nothing, and
-  * each comparison is a primitive int compare.
+  * interned-int merge at sf0.1 (PERF.md "Round-8 late additions").
+  * The merge does one linear pass over the two ArrayData buffers,
+  * allocates nothing, and each comparison is a primitive int compare.
   *
   * CONTRACT: both arrays ascending-sorted and deduped — exactly what
   * SetSimJoin's `sort_array(collect_list(tid))` over distinct tokens

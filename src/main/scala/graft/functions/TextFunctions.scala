@@ -228,13 +228,10 @@ object TextFunctions {
     out.result()
   }
 
-  /** The reference's word-rule tokenizer (`[\w]+|[^\s\w]`) — shared
-    * by BIO labeling and the spaCy-analog token counts.
+  /** The reference's ASCII word-rule tokenizer (`[\w]+|[^\s\w]`),
+    * used by [[bioLabels]] only.
     */
   private val wordTokenRe = "[\\w]+|[^\\s\\w]".r
-
-  def wordTokens(text: String): Seq[String] =
-    if (text == null) Seq.empty else wordTokenRe.findAllIn(text).toSeq
 
   /** Unicode variant of the word rule — the spaCy-analog token counts
     * use Python's unicode `\w` (umlauts/ligatures are word chars);

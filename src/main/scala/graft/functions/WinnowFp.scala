@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * themselves; text shorter than 5 chars → empty. The SQL version pays
   * an interpreted lambda + hex/conv string round-trip per character
   * position; this computes digests in one compiled loop
-  * (tools.WinnowProbe measures the gap).
+  * (PERF.md round 6, "Native winnowing expression", has the gap).
   */
 object WinnowFp {
 

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * (map-side) aggregation applies to the groupBy, and AQE can still
   * pick a broadcast join if the aggregated side turns out small.
   *
-  * Skew (measured, tools/SkewProbe + PERF.md round 4): algebraic aggs
-  * (count/sum) are skew-immune — partials absorb a hot key before the
-  * shuffle. `collectJoin` is holistic: one reducer must hold a hot
-  * key's full array, which is irreducible because the OUTPUT row is
+  * Skew (measured, PERF.md "Skew evidence for the relational family"):
+  * algebraic aggs (count/sum) are skew-immune — partials absorb a hot key
+  * before the shuffle. `collectJoin` is holistic: one reducer must hold a
+  * hot key's full array, which is irreducible because the OUTPUT row is
   * that array (the reference's json_agg has the same bound) — cost is
   * bounded by hot-key volume, not corpus size. Raw (unaggregated)
   * joins rely on AQE's skew split (verified firing: SortMergeJoin

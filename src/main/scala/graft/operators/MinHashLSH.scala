@@ -573,8 +573,10 @@ object MinHashLSH {
     // the whole dispatch for the common case (gate-scale batches fit in
     // the 64k probe), but a frame that overflows the probe no longer
     // ships up to lim+1 (~2M) rows to the driver just to discard them —
-    // one count of the (now materialized) cache decides, and only a
-    // frame that truly fits is then collected, straight off the cache.
+    // one count decides, and only a frame that truly fits is then
+    // collected. The limit-collect cached only the partitions it
+    // touched, so that count still computes the partitions it did not
+    // reach; the final collect reads them all from the cache.
     val probeLim = math.min(lim, 1 << 16)
     val fastRows =
       if (!comparableIdType(idType)) None

@@ -30,7 +30,8 @@ import org.apache.spark.sql.functions._
   * generalized to any integral ordinal (epoch nanos/micros/days).
   * Intervals are inclusive on both ends.
   *
-  * WHEN TO USE (probe-measured, tools/RangeJoinProbe):
+  * WHEN TO USE (measured: PERF.md round 7, "Range join rewrite: when
+  * bucketization wins"):
   *  - NO equi key (`equiKeys = Seq.empty`): Spark has nothing to hash
   *    on and plans BroadcastNestedLoopJoin — |P|·|I| comparisons. The
   *    bucket column MANUFACTURES the equi key: flat ~0.4 s across a

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * prefix positions (pa, pb) bounds the overlap by
   * min(na−pa, nb−pb)+1, which must reach ⌈τ/(1+τ)·(na+nb)⌉ — on the
   * duplicate-dense sf0.1 corpus this drops raw candidates 3.5×,
-  * tools.SetSimProbe).
+  * PERF.md "Round-8 late additions").
   *
   * Tokens are INTERNED to frequency-ranked int ids before the join
   * ([[GlobalRank]] over the (df, token) order — a range-exchange
@@ -308,7 +308,7 @@ object SetSimJoin {
     *    inner join is a semi-join on prefix membership). Measured on
     *    the worst case (31-token vocabulary, sf0.1): b postings
     *    116,231 → 53,224 (2.18×) with the final candidate set
-    *    bit-identical — tools.SetSimProbe / PERF.md.
+    *    bit-identical — PERF.md, "Containment-join b-side candidate bound".
     *  - length filter |b| ≥ τ·|a| (b can't contain more of a than b has)
     *  - positional bound min(na−pa, nb−pb)+1 ≥ ⌈τ·na⌉
     *

@@ -600,9 +600,10 @@ object VectorOps {
   }
 
   /** Smallest-power-of-two bucket count for a cell store at the given
-    * nlist, clamped to [16, 4096] — 4096 is CellLayoutProbe's measured
-    * flat-to-10⁶-cells point (PERF.md round 13); below 16 the bucketing
-    * is pure overhead.
+    * nlist, clamped to [16, 4096] — 4096 is the measured
+    * flat-to-10⁶-cells point (PERF.md, "Round 13 — the bucketed-cell
+    * store layout", before/after at high cell count); below 16 the
+    * bucketing is pure overhead.
     */
   def defaultBuckets(nlist: Long): Int =
     math.min(4096L, math.max(16L,
@@ -614,13 +615,14 @@ object VectorOps {
     *
     * The flat `cell=<id>` directory-per-cell layout is optimal ONLY for
     * a FIXED small codebook (tens of cells — the s13-s19 nlist=4 tier):
-    * its per-directory metadata cost walls at ~10⁵ cells
-    * (CellLayoutProbe). The layout is a WRITE-ONCE contract (the
-    * __layout marker refuses mixed writers), so a store cannot switch
-    * layouts as its codebook grows — which means the dispatch must key
-    * on the POLICY, not on today's observed nlist: a corpus-scaled
-    * nlist (the k = n/100 family) starts small at small SF and crosses
-    * the wall in production, exactly when a rewrite is most expensive.
+    * its per-directory metadata cost walls at ~10⁵ cells (PERF.md,
+    * "Round 13 — the bucketed-cell store layout"). The layout is a
+    * WRITE-ONCE contract (the __layout marker refuses mixed writers), so
+    * a store cannot switch layouts as its codebook grows — which means
+    * the dispatch must key on the POLICY, not on today's observed nlist:
+    * a corpus-scaled nlist (the k = n/100 family) starts small at small
+    * SF and crosses the wall in production, exactly when a rewrite is
+    * most expensive.
     *
     * Hence: the default is BUCKETED (`cell_bucket = cell % B` partition
     * key, B = [[defaultBuckets]] at first write, then the marker's B
@@ -643,7 +645,7 @@ object VectorOps {
         require(nlist <= FlatLayoutMaxCells,
           s"flat cell=<id> layout requested for nlist=$nlist — the " +
             s"per-directory layout is only sane below $FlatLayoutMaxCells " +
-            "cells (it walls at ~1e5 dirs, CellLayoutProbe); drop " +
+            "cells (it walls at ~1e5 dirs, PERF.md round 13); drop " +
             "fixedNlist to get the bucketed layout")
         committedCellAppend(assigned, indexDir, batchId)
       case None if hasFlatCellData(fs, indexDir) =>

@@ -173,8 +173,8 @@ object ZOrder {
 
   /** How many of fileBoxes' per-file (min, max) boxes intersect the
     * query box [lo1,hi1]×[lo2,hi2] — the ONE intersection predicate
-    * shared by every pruning assertion (k18/k19 gates, ZOrderSpec,
-    * ZOrderProbe), so the positional row layout lives in one place.
+    * shared by every pruning assertion (k18/k19 gates, ZOrderSpec),
+    * so the positional row layout lives in one place.
     * Pass Long.MinValue/MaxValue for an unconstrained side.
     */
   def boxHits(boxes: Array[org.apache.spark.sql.Row],

@@ -178,6 +178,10 @@ object CorpusPipeline {
     */
   private[graft] final case class Landed(nDocs: Long, nCitations: Long, nCovered: Long)
 
+  /** The store names of the tables a wave lands, in landing order. */
+  private[graft] val waveTableNames: Seq[String] = Seq("documents", "sections",
+    "citations", "judgments", "compositions", "participations", "lower_courts", "people")
+
   /** A wave's eight tables by store name, over its cached `docs` and
     * `sectioned` frames. `cited` and `covered` observe the citation rows
     * and the documents with a judgment outcome as the wave writes them.
@@ -185,16 +189,17 @@ object CorpusPipeline {
   private[graft] def waveTables(spark: SparkSession, docs: DataFrame, sectioned: DataFrame,
                                 spider: String, cited: Observation,
                                 covered: Observation): Seq[(String, DataFrame)] =
-    Seq(
-      "documents" -> docs,
-      "sections" -> sectioned,
-      "citations" -> citations(sectioned).observe(cited, count(lit(1)).as("n")),
-      "judgments" -> judgments(sectioned)
-        .observe(covered, count_if(size(col("outcomes")) > 0).as("n")),
-      "compositions" -> compositions(sectioned, spider),
-      "participations" -> participations(sectioned, spider),
-      "lower_courts" -> lowerCourts(sectioned),
-      "people" -> people(spark, sectioned))
+    waveTableNames.map(t => t -> (t match {
+      case "documents" => docs
+      case "sections" => sectioned
+      case "citations" => citations(sectioned).observe(cited, count(lit(1)).as("n"))
+      case "judgments" => judgments(sectioned)
+        .observe(covered, count_if(size(col("outcomes")) > 0).as("n"))
+      case "compositions" => compositions(sectioned, spider)
+      case "participations" => participations(sectioned, spider)
+      case "lower_courts" => lowerCourts(sectioned)
+      case "people" => people(spark, sectioned)
+    }))
 
   /** Land one wave's eight tables under `outDir` in one concurrent pass
     * (`Sinks.upsertKeyed`) keyed on the wave's decision ids: each table

@@ -31,7 +31,7 @@ object DedupQueries extends QueryPack {
     df.withColumn("w", split(col("text"), " "))
 
   /** Shared CHAIN-topology band rows for the keep-list gates/probes
-    * (d17, d18, e23, tools.StoreProbe): every doc in its own bucket,
+    * (d17, d18, e23): every doc in its own bucket,
     * plus doc↔(doc-1) linkage broken at %8 boundaries — one definition
     * so the gates can never silently diverge from their recursive
     * oracles (which restate exactly these edges).
@@ -786,7 +786,7 @@ object DedupQueries extends QueryPack {
     // `simhash_md5` expression (functions.SimHashMd5) — one digest per
     // token, all 32 bit-votes in one pass over raw bytes; bit-identical
     // to the interpreted higher-order-lambda SQL formulation
-    // (SimHashMd5Spec pins the equivalence, tools.SimhashProbe the
+    // (SimHashMd5Spec pins the equivalence, PERF.md round 6 the
     // speedup). Same fingerprint family as TextFunctions.simhash64
     // truncated to the md5-low-32 path.
     Q("d4_simhash",
@@ -1258,10 +1258,11 @@ object DedupQueries extends QueryPack {
     // long-tailed distribution a real corpus has), where the bound's
     // claimed real-world win applies: shingles absent from every probe
     // prefix drop out of the b side entirely via the minNa semi-join.
-    // The pruning fraction is PINNED in tools.SetSimProbe's `zipf`
-    // mode (PERF.md row); the oracle is the unchanged brute-force
-    // directed self-join, restated over trigrams (the duckBandsChain
-    // shingle expression — the established word_ngrams(w,3) dual).
+    // The pruning fraction is measured in PERF.md round 10, "Containment
+    // b-side bound on a REALISTIC vocabulary"; the oracle is the
+    // unchanged brute-force directed self-join, restated over trigrams
+    // (the duckBandsChain shingle expression — the established
+    // word_ngrams(w,3) dual).
     Q("d30_containment_zipf",
       (s, d) => graft.operators.SetSimJoin.containmentJoin(
         withShingles(Tables.documents(s, d)), "doc_id", col("sh"), 19, 20),

@@ -897,7 +897,8 @@ object EventQueries extends QueryPack {
     // EXACT integer cross-multiplication, one terminal double division
     // (dsirDrift) — trips the rational threshold 1/10, refits from the
     // already-committed partials (merge of #buckets×#gens rows, never
-    // a corpus re-scan — cost pinned in tools.DsirRefreshProbe), and
+    // a corpus re-scan — cost in PERF.md round 7, "DSIR staleness-loop
+    // cost curve"), and
     // re-scores through the same dsirSelect. drift_after_refresh
     // re-evaluates the metric at the refreshed snapshot: exactly 0 /
     // fresh — the loop closes. Oracle restates the shifted-corpus
@@ -1186,7 +1187,7 @@ object EventQueries extends QueryPack {
     // ---- LATE-DATA accounting (e27): the watermark's DROP discipline
     // gated explicitly — every other watermark gate feeds data in
     // event-time order, so the drop path never fires. The protocol
-    // pins the REAL Spark semantics (probed in tools.E27Probe): a late
+    // pins the REAL Spark semantics, as this gate observes them: a late
     // row is only guaranteed dropped once its window's state has been
     // EVICTED, and eviction happens at the end of a batch whose
     // watermark passed the window — so the early half (even event_id)

@@ -957,13 +957,13 @@ object ExtractQueries extends QueryPack {
       (s, d) => corpusStreamJoin(s, corpusStreamFixture(s)),
       corpusStreamOracle),
 
-    // ---- Post-stream COMPACTION (K-family maintenance): the stream's
-    // micro-batches leave one file per touched bucket per batch in every
-    // upsert table; compactUpserted rewrites each table to one file per
-    // bucket while preserving the __bucket layout (a later upsert must
-    // still find its routing dirs). Gate = the same corpus join read
-    // from the COMPACTED tables, against the same oracle — row-identical
-    // or the compaction corrupted the table.
+    // ---- Post-stream COMPACTION (K-family maintenance): each of the
+    // stream's micro-batches rewrites the buckets it touched in every
+    // upsert table; compactUpserted rewrites each whole table to one
+    // file per bucket while preserving the __bucket layout (a later
+    // upsert must still find its routing dirs). Gate = the same corpus
+    // join read from the COMPACTED tables, against the same oracle —
+    // row-identical or the compaction corrupted the table.
     Q("x36_stream_compacted",
       (s, d) => {
         // reuse the most recent x35 stream output when the session has
@@ -976,8 +976,9 @@ object ExtractQueries extends QueryPack {
           case Some(dir) if new java.io.File(dir).isDirectory => dir
           case _ => corpusStreamFixture(s)
         }
-        for (t <- Seq("documents", "sections", "citations", "judgments",
-          "participations", "lower_courts"))
+        // every table a wave lands; compactUpserted skips one the
+        // landing removed, or never wrote, because it was left empty
+        for (t <- graft.pipeline.CorpusPipeline.waveTableNames)
           graft.sources.Sinks.compactUpserted(s, s"$out/$t")
         corpusStreamJoin(s, out)
       },
@@ -993,7 +994,7 @@ object ExtractQueries extends QueryPack {
     * root. (x35 always runs its own stream — it is the measured
     * operator; x36 reuses the memoized output when present.)
     */
-  private def corpusStreamFixture(s: org.apache.spark.sql.SparkSession): String = {
+  private[queries] def corpusStreamFixture(s: org.apache.spark.sql.SparkSession): String = {
         import java.nio.file.Files
         import java.nio.charset.StandardCharsets.UTF_8
         val landing = Scratch.dir("graft_x35_landing_")

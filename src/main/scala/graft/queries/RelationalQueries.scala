@@ -119,7 +119,7 @@ object RelationalQueries extends QueryPack {
     * inputs are bucket relations (≤4096 rows each at any corpus size),
     * so drift is a broadcast-sized full-outer join + one agg —
     * evaluating it per batch is free relative to any scoring run
-    * (measured: tools.DsirRefreshProbe / PERF.md).
+    * (measured: PERF.md round 7, "DSIR staleness-loop cost curve").
     *
     * ZERO-MASS convention (the terminal division is 0/0 when a side
     * has no target tokens, and NaN must never reach the decision):
@@ -1683,7 +1683,8 @@ object RelationalQueries extends QueryPack {
     // decimal wsum parquet-round-trips exactly —
     // `incremental_consistent` asserts it in-gate against the full
     // dsirSelect. The refresh-step economics (score one batch vs
-    // re-score the corpus) are pinned in tools.DsirRefreshProbe.
+    // re-score the corpus) are in PERF.md round 10, "Incremental DSIR
+    // scoring economics".
     Q("o18_dsir_incremental_score",
       (s, d) => {
         val dir = Scratch.dir("graft_o18_").toString + "/scores"

@@ -750,7 +750,7 @@ object SimilarityQueries extends QueryPack {
     // thing — subset training, frozen assignment, both searches, the
     // per-query recall, and the trigger comparison — so the drift
     // measurement itself is hash-checked, at every SF. (Re-train cost
-    // curve: tools.RetrainProbe → PERF.md.)
+    // curve: PERF.md round 7, "IVF re-train cost curve".)
     Q("s15_ivf_staleness",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window

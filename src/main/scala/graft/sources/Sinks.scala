@@ -255,7 +255,7 @@ object Sinks {
     // writes `tmp`, so there is no read-from-overwrite-target hazard and
     // nothing to materialize up front. (The previous localCheckpoint
     // strategy pinned the whole merged set in executor block storage —
-    // measured parity at sf0.1 (tools.UpsertProbe, medians 2.01 vs
+    // measured parity at sf0.1 (PERF.md round 6, medians 2.01 vs
     // 1.97 s) but a memory ceiling and an executor-loss hazard at scale;
     // this writes the data exactly once, then swaps directory entries.)
     val tmp = new org.apache.hadoop.fs.Path(path + "__upsert_tmp")
@@ -601,8 +601,9 @@ object Sinks {
                               transform: DataFrame => DataFrame): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    // a table this stream never wrote (all its batches were empty —
-    // upsertBucketed writes nothing then, by design): nothing to compact
+    // a table never written (all its batches were empty — upsertKeyed
+    // writes nothing then, by design) or removed when a landing left it
+    // with no bucket: nothing to compact
     if (!healSwap(fs, path)) return
     swapRewrite(fs, path) { tmp =>
       clusterByPartition(transform(spark.read.parquet(path)), "__bucket")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** GENERATION-AXIS economics for the persisted retrieval stores
-  * (VERDICT r13 directive 6): CellLayoutProbe measured listing/serve
+  * (VERDICT r13 directive 6): PERF.md round 13 measured listing/serve
   * cost against CELL count and justified the bucketed-cell layout with
   * a curve; the other unbounded store axis is GENERATION count —
   * partitions PER generation are bounded by the PERF.md ceiling table,
@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   * Batches are FIXED-SIZE synthetics, so generation count is the ONLY
   * variable; appends are cumulative so each rung reuses the previous
   * one's store. Every ladder gets a warmup rung, and a rung that blows
-  * the time budget skips the larger rungs LOUDLY (the CellLayoutProbe
-  * discipline — a probe that silently measured only the cheap rungs
-  * would understate the curve).
+  * the time budget skips the larger rungs LOUDLY (a probe that
+  * silently measured only the cheap rungs would understate the curve).
   *
   * Each BM25 serve also prints `listing_jobs=`: the Spark jobs it
   * started for distributed file listing (Spark lists a directory level
@@ -43,41 +42,52 @@ object GenLayoutProbe {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Run `f` and count the jobs it started that are Spark's distributed
-    * file listing (job description "Listing leaf files and directories
-    * ..."). `f` runs under a fresh job group; a marker job submitted
-    * after it drains the listener queue, since the bus delivers job
-    * starts in submission order.
+  /** Run `f` and count the Spark jobs it started whose properties pass
+    * `counted`, in any job group and from any thread. A marker job
+    * submitted after `f` drains the listener queue, since the bus
+    * delivers job starts in submission order.
     */
-  def countListingJobs[T](spark: SparkSession)(f: => T): (T, Int) = {
+  def countJobs[T](spark: SparkSession)(counted: java.util.Properties => Boolean)(
+      f: => T): (T, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val group = s"listing-count-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val listing = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = s"job-count-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        for (p <- Option(e.properties)
-             if p.getProperty("spark.jobGroup.id") == group) {
-          val desc = Option(p.getProperty("spark.job.description")).getOrElse("")
-          if (desc == marker) drained.countDown()
-          else if (desc.startsWith("Listing leaf files")) listing.incrementAndGet()
-        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        if (p.getProperty("spark.job.description") == marker) drained.countDown()
+        else if (counted(p)) n.incrementAndGet()
+      }
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
     try {
       val r = f
       sc.setJobDescription(marker)
       sc.parallelize(Seq(0), 1).count()
       require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener queue did not drain within 60 s")
-      (r, listing.get)
+      (r, n.get)
     } finally {
-      sc.clearJobGroup()
+      sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Run `f` under a fresh job group and count the jobs it started
+    * there that are Spark's distributed file listing (job description
+    * "Listing leaf files and directories ...").
+    */
+  def countListingJobs[T](spark: SparkSession)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"listing-count-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try countJobs(spark) { p =>
+      p.getProperty("spark.jobGroup.id") == group &&
+        Option(p.getProperty("spark.job.description")).exists(_.startsWith("Listing leaf files"))
+    }(f)
+    finally sc.clearJobGroup()
   }
 
   /** fixed-size synthetic batch for generation g: 40 docs, 8 tokens

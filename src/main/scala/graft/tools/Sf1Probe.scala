@@ -1,12 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Tables
 
 /** The 10× SCALING GATE promoted from advisory to enforced (VERDICT r7
   * directive 6): build an sf1-scale dir (sf0.1 documents/embeddings
-  * replicated 10× with fresh ids and rotated/shifted content — the
-  * ScaleProbe replication scheme), run the dedup/ANN/streaming tier
+  * replicated 10× with fresh ids and rotated/shifted content, see
+  * [[replicateDocs]]), run the dedup/ANN/streaming tier
   * gates at sf0.1 AND sf1 through the REAL SparkEntry entry points, and
   * enforce the scaling_audit threshold per query: an sf1 time more than
   * 12× its sf0.1 time (with the same >0.35 s floor) flags. x35 is a
@@ -241,14 +243,39 @@ object Sf1Probe {
     (n.toDouble * math.sqrt(k.toDouble)).toLong
   }
 
+  /** The documents n×: fresh ids (doc_id·n + rep) and each replica's
+    * word stream rotated, so shingles differ while the near-dup
+    * structure stays realistic.
+    */
+  private def replicateDocs(spark: SparkSession, d: String, n: Int): DataFrame =
+    Tables.documents(spark, d)
+      .crossJoin(spark.range(n).toDF("rep"))
+      .select(
+        (col("doc_id") * n + col("rep")).as("doc_id"),
+        concat_ws(" ", expr("slice(split(text, ' '), CAST(rep % 5 + 1 AS INT), 10000)"),
+          col("rep").cast("string")).as("text"),
+        col("lang"), col("source"))
+
+  /** The embeddings n×: fresh ids (vec_id·n + rep), each replica's
+    * vector shifted by a small per-component offset.
+    */
+  private def replicateVecs(spark: SparkSession, d: String, n: Int): DataFrame =
+    Tables.embeddings(spark, d)
+      .crossJoin(spark.range(n).toDF("rep"))
+      .select(
+        (col("vec_id") * n + col("rep")).as("vec_id"),
+        expr("transform(embedding, (x, i) -> x + CAST(rep AS FLOAT) * 0.001 * CAST(i % 7 AS FLOAT))")
+          .as("embedding"),
+        col("label"))
+
   /** Replicate a raw parquet table n× with fresh surrogate keys
-    * (key·n + rep) — the dimension-table face of the ScaleProbe
+    * (key·n + rep) — the dimension-table face of the same
     * replication scheme, so gates over customer/supplier scale with
     * the corpus instead of being excluded as unscaled dims.
     */
   private def replicateKeyed(spark: SparkSession, src: String,
                              table: String, n: Int,
-                             keyCols: Set[String]): org.apache.spark.sql.DataFrame = {
+                             keyCols: Set[String]): DataFrame = {
     val df = spark.read.parquet(s"$src/$table.parquet")
     df.crossJoin(spark.range(n).toDF("rep"))
       .select(df.columns.map(c =>
@@ -263,9 +290,9 @@ object Sf1Probe {
       java.nio.file.Files.exists(marker) &&
       java.nio.file.Files.readString(marker) == tag
     if (fresh) return
-    ScaleProbe.replicateDocs(spark, src, 10)
+    replicateDocs(spark, src, 10)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
-    ScaleProbe.replicateVecs(spark, src, 10)
+    replicateVecs(spark, src, 10)
       .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
     // dimension tables for the quota/top-k gates (o16/a25): fresh keys,
     // group columns (c_mktsegment / s_nationkey) untouched so group

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.Sinks
+import graft.tools.GenLayoutProbe.countJobs
 
 /** The wave landing: `CorpusPipeline.run` lands its eight tables in one
   * concurrent pass keyed on the wave's decision ids. Pins the
@@ -192,31 +193,9 @@ class WaveLandingSpec extends SparkSpec {
   }
 
   /** Spark jobs `f` launches, in any job group (the landing's concurrent
-    * writes run under their own); a marker job drains the listener bus
+    * writes run under their own)
     */
-  private def jobsOf[T](f: => T): Int = {
-    val sc = spark.sparkContext
-    val marker = s"job-count-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          drained.countDown()
-        else n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(0), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      n.get
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf[T](f: => T): Int = countJobs(spark)(_ => true)(f)._2
 
   test("job counts: an incremental wave and a one-table upsert") {
     val out = Files.createTempDirectory("wave_jobs").toString
