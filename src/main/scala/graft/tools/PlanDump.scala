@@ -255,6 +255,31 @@ object PlanDump {
     md.digest().map("%02x".format(_)).mkString
   }
 
+  /** One plan's text with its run-dependent tokens made stable, so a
+    * regenerated PLANS.md differs only where a plan did: expression ids
+    * (`#10696L`), `plan_id`s and RDD ids (`MapPartitionsRDD[1192]`) are
+    * renumbered in first-seen order, scratch-dir random suffixes
+    * (`/tmp/graft_x22_landing_<n>`) become `<n>`, and lambda class
+    * names lose their JVM-assigned numbers and hash.
+    */
+  def normalize(plan: String): String = {
+    // group 1 of `re` is the id; `fmt` rebuilds the match around its
+    // first-seen rank
+    def renumber(text: String, re: scala.util.matching.Regex,
+                 fmt: (Int, scala.util.matching.Regex.Match) => String): String = {
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+        fmt(ids.getOrElseUpdate(m.group(1), ids.size + 1), m)))
+    }
+    val steps: Seq[String => String] = Seq(
+      renumber(_, """#(\d+)(L?)""".r, (i, m) => s"#$i${m.group(2)}"),
+      renumber(_, """plan_id=(\d+)""".r, (i, _) => s"plan_id=$i"),
+      renumber(_, """RDD\[(\d+)\]""".r, (i, _) => s"RDD[$i]"),
+      _.replaceAll("""(/[\w.-]*_)\d{6,}""", "$1<n>"),
+      _.replaceAll("""\$\$Lambda[$\w/]*(@[0-9a-f]+)?""", """\$\$Lambda"""))
+    steps.foldLeft(plan)((s, f) => f(s))
+  }
+
   def main(args: Array[String]): Unit = {
     // COVERAGE GATE first — fail before any dumping if an enforced
     // gate has neither plan evidence nor an exclusion reason
@@ -278,8 +303,8 @@ object PlanDump {
     for (name <- headline) {
       val df = graft.SparkEntry.queries(name)(spark, d)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
     // the d34/s24 gates dump their MATERIALIZED results (the lifecycle
@@ -313,8 +338,8 @@ object PlanDump {
       val asg = graft.operators.VectorOps
         .ivfAssignHierDist(e, "vec_id", norms(coarseCb), fineDf)
       sb.append("\n## ivfAssignHierDist (inner plan of the d34/s24 tier)\n\n```\n")
-      sb.append(asg.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(normalize(asg.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
     // the bucketed-cell store's serve scan (s26–s29): the partition
@@ -335,8 +360,8 @@ object PlanDump {
         .where(col("cell_bucket").isin(3))
         .where(col("cell").isin(3L, 11L))
       sb.append("\n## bucketed-cell serve scan (s26–s29 store layout)\n\n```\n")
-      sb.append(served.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(normalize(served.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
     Files.write(Paths.get("PLANS.md"),
