@@ -419,15 +419,16 @@ object MinHashLSH {
       org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration), indexDir)
 
-  /** The pruned index read the bucketed probe runs — exposed so specs
-    * can pin the PartitionFilters on the very plan the operator
-    * executes (the executed gate result is a LogicalRDD wrapper).
+  /** The pruned index read the bucketed probe runs: only the probed
+    * `hb=` dirs of every generation, through the one store reader
+    * ([[graft.sources.Sinks.readGenerations]]) — exposed so specs can
+    * pin the PartitionFilters on the very plan the operator executes
+    * (the executed gate result is a LogicalRDD wrapper).
     */
   private[graft] def prunedBucketedIndex(spark: org.apache.spark.sql.SparkSession,
                                          indexDir: String,
                                          probedHb: Seq[Int]): DataFrame =
-    spark.read.parquet(indexDir)
-      .where(col("hb").isin(probedHb.map(Integer.valueOf): _*))
+    graft.sources.Sinks.readGenerations(spark, indexDir, probe = Some("hb" -> probedHb))
 
   /** Incremental dedup against the BUCKETED index: collect the batch's
     * distinct hb set (bounded by |batch|·k) under the index's recorded
@@ -492,9 +493,10 @@ object MinHashLSH {
           new org.apache.hadoop.fs.Path(s"$verdictDir/.tmp_batch_$batchId"),
           verdictPath)
       }
-      // admitted set from the COMMITTED verdict (read once); the
-      // generational append is itself idempotent per batchId
-      val verdict = spark.read.parquet(verdictPath.toString)
+      // admitted set from the COMMITTED verdict (read once, its schema
+      // from a footer); the generational append is itself idempotent
+      // per batchId
+      val verdict = graft.sources.Sinks.readGenerations(spark, verdictPath.toString)
       graft.sources.Sinks.committedPartitionedAppend(
         admittedBands(bb, verdict, idCol), indexDir, batchId, "hb")
       verdict

@@ -711,28 +711,6 @@ object VectorOps {
       graft.sources.Sinks.rewriteGenerations(spark, indexDir, Some("cell"), keep)
   }
 
-  /** Shared serve-scan refusal guards (ADVICE r15: the array- and
-    * frame-driven serve entry points duplicated these — one copy so a
-    * future edit to the refusal behavior cannot silently diverge).
-    * An as-of snapshot must not predate the compaction horizon (folded
-    * generations are not reconstructible) and must fit the int
-    * partition-value range (`gen` is discovery-typed int; a silent
-    * toInt would wrap past 2^31 generations and serve the wrong
-    * snapshot).
-    */
-  private def assertAsOfServable(fs: org.apache.hadoop.fs.FileSystem,
-                                 indexDir: String,
-                                 asOf: Option[Long]): Unit =
-    for (a <- asOf) {
-      for (m <- graft.sources.Sinks.maxFoldedGen(fs, indexDir) if m > a)
-        throw new IllegalStateException(
-          s"as-of gen $a predates the compaction horizon $m of $indexDir — " +
-            "folded generations are not reconstructible; snapshot before " +
-            "compacting or keep more history")
-      require(a <= Int.MaxValue,
-        s"as-of gen $a exceeds the int partition-value range of $indexDir")
-    }
-
   /** The marker cell-TYPE assert of the serve contract (VERDICT r13
     * directive 8): a drift between the __layout marker's recorded cell
     * type and the scanned schema is the silent-wrong-probe class
@@ -749,129 +727,77 @@ object VectorOps {
           "rebuild the store or fix the writer")
     }
 
+  /** Probed cells up to which the bucketed serve filters `cell` by a
+    * literal list; above it, by a broadcast left-semi join.
+    */
+  private val IsinMaxCells = 128
+
   /** The probed-cell SERVE SCAN over a persisted cell store, layout-
     * dispatched on the __layout marker — ONE copy of the contract every
     * IVF serve (flat s13-s19, two-level s20-s23, dist s24/s25, bucketed
-    * s26-s30) reads through:
+    * s26-s30) reads through. The probed cells come as a FRAME
+    * (`cell: bigint`), so the driver payload is bounded by construction:
+    * one `limit(IsinMaxCells + 1)` collect decides the dispatch — if the
+    * distinct probed cells fit, that slice IS the complete set (limit
+    * n+1 of an ≤n-row frame returns every row).
     *
     *  - BUCKETED: the probed cells map to their `cell % B` bucket dirs
     *    — a STATIC partition prune bounded by B literals no matter how
-    *    many cells exist, whose dirs are resolved per generation by a
-    *    direct file-system listing ([[graft.sources.Sinks.prunedPartitionRead]])
-    *    so a store with more than 32 buckets per generation never pays
-    *    a distributed listing per request — then the in-bucket cell filter SIZE-
-    *    DISPATCHES (VERDICT r13 directive 2): up to
-    *    `graft.ivf.isinMaxCells` (default 128) probed cells it is a
-    *    literal In(cell, ...) pushed into the parquet scan (a row-group
-    *    min/max skip over the cell-sorted files; NOTE parquet converts
-    *    In to a min/max RANGE above
+    *    many cells exist. Up to IsinMaxCells probed cells the cell
+    *    filter is a literal In(cell, ...) pushed into the parquet scan
+    *    (a row-group min/max skip over the cell-sorted files; NOTE
+    *    parquet converts In to a min/max RANGE above
     *    spark.sql.parquet.pushdown.inFilterThreshold=10 probed cells —
-    *    still a skip on sorted files, pinned in BucketedIvfSpec); above
-    *    the threshold it becomes a broadcast LEFT SEMI join against the
-    *    probed-cell list, so a 10⁵-query batch never inflates the plan
-    *    with 10⁵·nprobe literals (the bucket prune stays static and
-    *    bounded by B either way). The marker's recorded cell TYPE is
-    *    asserted against the scanned schema — a truncation-class drift
-    *    refuses loudly (VERDICT r13 directive 8).
+    *    still a skip on sorted files, pinned in BucketedIvfSpec). Above
+    *    it the driver collects only the distinct BUCKETS (≤ B) and the
+    *    cell filter is a broadcast LEFT SEMI join against the frame, so
+    *    a 10⁵-query batch neither ships its cells through the driver
+    *    nor inflates the plan with 10⁵·nprobe literals. The marker's
+    *    recorded cell TYPE is asserted against the scanned schema — a
+    *    truncation-class drift refuses loudly (VERDICT r13 directive 8).
     *  - FLAT: `cell` IS the (int-typed) partition column and the probed
     *    list is bounded by the fixed small nlist, so the literal isin
     *    stays the right shape; the scan normalizes cell to bigint AFTER
     *    the prune so consumers join Long keys on either layout.
     *
-    * `asOf` restricts to generations ≤ the snapshot on the SAME scan
-    * (a second static prune) and refuses past the compaction horizon.
-    */
-  def prunedCellScan(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String, probed: Array[Long],
-                     asOf: Option[Long] = None): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assertAsOfServable(fs, indexDir, asOf)
-    val scan = graft.sources.Sinks.layoutMarkerOpt(fs, indexDir) match {
-      case Some(b) =>
-        val bks = probed.map(c => (((c % b) + b) % b).toInt).distinct.sorted
-        val base = graft.sources.Sinks.prunedPartitionRead(
-          spark, indexDir, "cell_bucket", bks, asOf)
-        assertMarkerCellType(fs, indexDir, base)
-        val bucketPruned = base.where(col("cell_bucket").isin(bks: _*))
-        val isinMax = spark.conf.getOption("graft.ivf.isinMaxCells")
-          .map(_.toInt).getOrElse(128)
-        val cellFiltered =
-          if (probed.length <= isinMax)
-            bucketPruned.where(col("cell").isin(probed: _*))
-          else {
-            import spark.implicits._
-            // re-select the scan's column order: a USING join hoists the
-            // key first, and the two dispatch arms must be drop-in equal
-            bucketPruned.join(
-                broadcast(probed.toSeq.toDF("cell")), Seq("cell"), "left_semi")
-              .select(bucketPruned.columns.map(col): _*)
-          }
-        cellFiltered.drop("cell_bucket")
-      case None =>
-        // partition-column values are inferred as int; matching-type
-        // literals keep the filter a pure partition prune (no cast);
-        // the bigint normalization is a post-prune projection
-        spark.read.parquet(indexDir)
-          .where(col("cell").isin(probed.map(_.toInt): _*))
-          .withColumn("cell", col("cell").cast("bigint"))
-    }
-    asOf.map(a => scan.where(col("gen") <= lit(a.toInt))).getOrElse(scan)
-      .drop("gen")
-  }
-
-  /** [[prunedCellScan]] driven by a probed-cell FRAME (`cell: bigint`)
-    * instead of a driver array — the serve path's driver payload is
-    * then BOUNDED BY CONSTRUCTION (round-15, VERDICT r14 watch item):
-    * one `limit(isinMaxCells + 1)` collect decides the dispatch — if
-    * the distinct probed cells fit, that slice IS the complete set
-    * (limit n+1 of an ≤n-row frame returns every row) and the literal
-    * In arm keeps its parquet row-group skip; past the threshold the
-    * driver materializes only the distinct cell BUCKETS (≤ B by
-    * construction) for the static partition prune and the cell filter
-    * stays a broadcast left-semi join fed from the frame. A 10⁵-query
-    * probe batch therefore never ships its cell set through the
-    * driver. Both arms are row-identical to [[prunedCellScan]]
-    * (BucketedIvfSpec's arm-equality discipline).
+    * Both layouts read through [[graft.sources.Sinks.readGenerations]],
+    * which resolves the probed dirs and the schema on the driver and
+    * holds the as-of contract: `asOf` keeps generations ≤ the snapshot
+    * on the same scan and refuses past the compaction horizon.
     */
   def prunedCellScanFromFrame(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, probeCells: DataFrame,
                               asOf: Option[Long] = None): DataFrame = {
-    val isinMax = spark.conf.getOption("graft.ivf.isinMaxCells")
-      .map(_.toInt).getOrElse(128)
-    val cells = probeCells.select(col("cell")).distinct()
-    val slice = cells.limit(isinMax + 1).collect().map(_.getLong(0))
-    if (slice.length <= isinMax)
-      return prunedCellScan(spark, indexDir, slice.sorted, asOf)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    assertAsOfServable(fs, indexDir, asOf)
+    val cells = probeCells.select(col("cell")).distinct()
+    val slice = cells.limit(IsinMaxCells + 1).collect().map(_.getLong(0)).sorted
+    val literal = slice.length <= IsinMaxCells
+    def read(partCol: String, values: Seq[Int]) =
+      graft.sources.Sinks.readGenerations(spark, indexDir, asOf, Some(partCol -> values))
     graft.sources.Sinks.layoutMarkerOpt(fs, indexDir) match {
       case Some(b) =>
-        // distinct BUCKETS from the frame — ≤ B rows by construction
-        val bks = cells
-          .select(pmod(col("cell"), lit(b.toLong)).cast("int").as("cb"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val base = graft.sources.Sinks.prunedPartitionRead(
-          spark, indexDir, "cell_bucket", bks, asOf)
+        val bks =
+          if (literal) slice.map(c => Math.floorMod(c, b.toLong).toInt).distinct.sorted.toSeq
+          else cells.select(pmod(col("cell"), lit(b.toLong)).cast("int"))
+            .distinct().collect().map(_.getInt(0)).sorted.toSeq
+        val base = read("cell_bucket", bks)
         assertMarkerCellType(fs, indexDir, base)
-        val bucketPruned = base.where(col("cell_bucket").isin(bks: _*))
-        // re-select the scan's column order: a USING join hoists the
-        // key first, and this arm must be drop-in equal to the array
-        // form (prunedCellScan's discipline)
-        val scan = bucketPruned
-          .join(broadcast(cells), Seq("cell"), "left_semi")
-          .select(bucketPruned.columns.map(col): _*)
-          .drop("cell_bucket")
-        asOf.map(a => scan.where(col("gen") <= lit(a.toInt))).getOrElse(scan)
-          .drop("gen")
+        val cellFiltered =
+          if (literal) base.where(col("cell").isin(slice: _*))
+          // re-select the scan's column order: a USING join hoists the
+          // key first, and the two arms must be drop-in equal
+          else base.join(broadcast(cells), Seq("cell"), "left_semi")
+            .select(base.columns.map(col): _*)
+        cellFiltered.drop("cell_bucket")
       case None =>
-        // flat stores are ≤ FlatLayoutMaxCells by contract, far under
-        // any sane isinMaxCells — reaching here means the conf was
-        // forced below the layout bound; the literal arm is still the
-        // bounded, correct shape (gen handling inside)
-        prunedCellScan(spark, indexDir,
-          cells.collect().map(_.getLong(0)).sorted, asOf)
+        // flat stores hold ≤ FlatLayoutMaxCells cells, under
+        // IsinMaxCells, so the slice is the whole probed set; partition
+        // values are inferred as int, and the bigint normalization is a
+        // post-prune projection
+        val all = if (literal) slice else cells.collect().map(_.getLong(0)).sorted
+        read("cell", all.map(_.toInt).toSeq)
+          .withColumn("cell", col("cell").cast("bigint"))
     }
   }
 

@@ -182,14 +182,16 @@ object CorpusPipeline {
   private[graft] val waveTableNames: Seq[String] = Seq("documents", "sections",
     "citations", "judgments", "compositions", "participations", "lower_courts", "people")
 
-  /** A wave's eight tables by store name, over its cached `docs` and
-    * `sectioned` frames. `cited` and `covered` observe the citation rows
-    * and the documents with a judgment outcome as the wave writes them.
+  /** A wave's eight tables by store name, each built on demand over the
+    * wave's cached `docs` and `sectioned` frames. `cited` and `covered`
+    * observe the citation rows and the documents with a judgment
+    * outcome as the wave writes them; an observation registers with the
+    * session only when its table is built.
     */
   private[graft] def waveTables(spark: SparkSession, docs: DataFrame, sectioned: DataFrame,
                                 spider: String, cited: Observation,
-                                covered: Observation): Seq[(String, DataFrame)] =
-    waveTableNames.map(t => t -> (t match {
+                                covered: Observation): Seq[(String, () => DataFrame)] =
+    waveTableNames.map(t => t -> (() => t match {
       case "documents" => docs
       case "sections" => sectioned
       case "citations" => citations(sectioned).observe(cited, count(lit(1)).as("n"))
@@ -218,7 +220,7 @@ object CorpusPipeline {
     val n = Sinks.upsertKeyed(sectioned.select("decision_id"), "decision_id", 16,
       waveTables(spark, docs, sectioned, spider, cited, covered)
         .map { case (t, df) => s"$outDir/$t" -> df })
-    // no documents: nothing was written, so nothing was observed
+    // no documents: no table was built, so no observation registered
     if (n == 0) Landed(0L, 0L, 0L)
     else Landed(n, observed(cited), observed(covered))
   }

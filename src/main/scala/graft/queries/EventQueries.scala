@@ -621,9 +621,10 @@ object EventQueries extends QueryPack {
     // replayed batch that re-appended df partials or stats would shift
     // idf/avgdl and the oracle hash fails — the gate DRIVES that replay
     // and asserts all four skips in `exactly_once`). Serve = t27's
-    // bucket-pruned path over the generational layout (tb still
-    // partition-prunes as the second level); the oracle is the plain
-    // full-corpus BM25, blind to batching, replay, and layout.
+    // bm25Serve over the generational layout (tb still partition-prunes
+    // as the second level; `served_pruned` joins `exactly_once`); the
+    // oracle is the plain full-corpus BM25, blind to batching, replay,
+    // and layout.
     Q("e24_stream_bm25_index",
       (s, d) => {
         val idx = Scratch.dir("graft_e24_idx_").toString
@@ -646,36 +647,14 @@ object EventQueries extends QueryPack {
         // at-least-once replay of batch 0's landing: every table must
         // skip (land returns true if ANY table actually wrote)
         val replayWrote = land(docs.where(col("doc_id") % 2 === 0), 0L)
-        val qrows = s.read.parquet(s"$idx/df")
-          .groupBy("token", "tb").agg(sum("df").as("df"))
+        // the query: the five highest-df terms, served through bm25Serve
+        val terms = graft.sources.Sinks.readGenerations(s, s"$idx/df")
+          .groupBy("token").agg(sum("df").as("df"))
           .orderBy(col("df").desc, col("token")).limit(5)
-          .collect()
-        val buckets = qrows.map(_.getInt(1)).distinct.sorted
-        val qdf = s.createDataFrame(
-          java.util.Arrays.asList(qrows.map(r =>
-            org.apache.spark.sql.Row(r.getString(0), r.getLong(2))): _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("token",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("df",
-              org.apache.spark.sql.types.LongType))))
-        val postings = s.read.parquet(s"$idx/postings")
-          .where(col("tb").isin(buckets.map(Integer.valueOf): _*))
-        val servedPruned = graft.sources.Sinks.scansPrunedOn(postings, "tb")
-        val stats = s.read.parquet(s"$idx/stats")
-          .agg((sum(col("sum_dl")).cast("double") /
-            sum(col("n")).cast("double")).as("avgdl"),
-            sum(col("n")).as("n"))
-        postings
-          .join(broadcast(qdf), "token")
-          .join(s.read.parquet(s"$idx/dl").select("doc_id", "dl"), "doc_id")
-          .crossJoin(broadcast(stats))
-          .select(col("doc_id"), TextQueries.bm25Contrib.as("c"))
-          .groupBy("doc_id")
-          .agg(sum("c").cast("double").as("bm25"))
-          .orderBy(col("bm25").desc, col("doc_id"))
-          .limit(20)
-          .withColumn("exactly_once", lit(!replayWrote && servedPruned))
+          .collect().map(_.getString(0)).toSeq
+        TextQueries.bm25Serve(s, idx, terms, 20)
+          .withColumn("exactly_once", !lit(replayWrote) && col("served_pruned"))
+          .drop("served_pruned")
       },
       Some(s"""WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
               tf AS (SELECT doc_id, token, count(*) AS tf FROM words GROUP BY 1, 2),

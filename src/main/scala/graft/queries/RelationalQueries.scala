@@ -1620,30 +1620,21 @@ object RelationalQueries extends QueryPack {
           dsirCounts(docs.where(col("doc_id") % 2 === 0)), dir, 0L)
         graft.sources.Sinks.committedAppend(
           dsirCounts(docs.where(col("doc_id") % 2 === 1)), dir, 1L)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        def modelAsOf(g: Long): DataFrame = {
-          for (m <- graft.sources.Sinks.maxFoldedGen(fs, dir) if m > g)
-            throw new IllegalStateException(
-              s"as-of gen $g predates the compaction horizon $m of $dir — " +
-                "folded model partials are not reconstructible; snapshot " +
-                "before compacting or keep more history")
-          s.read.parquet(dir).where(col("gen") <= lit(g.toInt))
+        // the as-of read refuses past the compaction horizon
+        def modelAsOf(g: Option[Long]): DataFrame =
+          graft.sources.Sinks.readGenerations(s, dir, g)
             .groupBy("b").agg(sum("cr").as("cr"), sum("ct").as("ct"))
-        }
         // the snapshot selection — materialized before the fold below
         val outDir = Scratch.dir("graft_o17_out_").resolve("sel").toString
-        dsirSelect(s, d, modelAsOf(0L)).write.parquet(outDir)
+        dsirSelect(s, d, modelAsOf(Some(0L))).write.parquet(outDir)
         // at-head ≡ generation-blind: equal COUNTS relations imply
         // equal models and selections (cheap 4096-row compare)
-        val blind = s.read.parquet(dir).groupBy("b")
-          .agg(sum("cr").as("cr"), sum("ct").as("ct"))
-        val headConsistent = modelAsOf(1L).unionByName(blind)
+        val headConsistent = modelAsOf(Some(1L)).unionByName(modelAsOf(None))
           .groupBy("b", "cr", "ct").count()
           .where(col("count") =!= 2).isEmpty
         graft.sources.Sinks.compactGenerations(s, dir, None)
         val loud =
-          try { modelAsOf(0L); false }
+          try { modelAsOf(Some(0L)); false }
           catch { case _: IllegalStateException => true }
         s.read.parquet(outDir)
           .withColumn("asof_contract", lit(headConsistent && loud))

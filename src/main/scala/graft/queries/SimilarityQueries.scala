@@ -102,8 +102,9 @@ object SimilarityQueries extends QueryPack {
   /** The SHARED s13/s14/s16 serve path over a persisted cell-
     * partitioned index: nprobe=2 probes for queries vec_id < 3
     * (collected — bounded driver state), a PARTITION-PRUNED read of the
-    * probed cell directories (a `gen` partition level, if present, is
-    * pruned through and dropped), broadcast cell equi-join, exact
+    * probed cell directories (VectorOps.prunedCellScanFromFrame: the
+    * store reader resolves the probed dirs of every generation ≤ asOf
+    * and drops `gen`), broadcast cell equi-join, exact
     * cosine top-5. One copy — the gates differ only in how the index
     * got onto disk. `cents` is used ONLY to build the default flat
     * probe; when `probe` is supplied (the two-level gates) the
@@ -131,8 +132,9 @@ object SimilarityQueries extends QueryPack {
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // try/finally so the s22/s28-style LOUD-REFUSAL paths (the as-of
-    // horizon / Int-range checks inside prunedCellScan, which run after
-    // the persist) release the probe cache too — a refusal per serve
+    // horizon / Int-range checks of the store reader under
+    // prunedCellScanFromFrame, which run after the persist) release the
+    // probe cache too — a refusal per serve
     // must not leak a pinned frame (ADVICE r14, low)
     try {
       // cell ids stay LONG end-to-end (the bucketed layout's cell is a
@@ -140,14 +142,13 @@ object SimilarityQueries extends QueryPack {
       // the scan itself — layout dispatch on the __layout marker, the
       // static bucket prune / literal-vs-semi-join cell filter size
       // dispatch, the as-of horizon contract, the marker type assert —
-      // is VectorOps.prunedCellScanFromFrame (round-15: the serve feeds
-      // the probe FRAME, so the driver materializes at most
-      // isinMaxCells cells or B buckets — never the full probed-cell
-      // set of a large query batch; VERDICT r14 watch item closed)
+      // is VectorOps.prunedCellScanFromFrame (the serve feeds the probe
+      // FRAME, so the driver materializes at most 128 cells or B
+      // buckets — never the full probed-cell set of a large query batch)
       val index = VectorOps.prunedCellScanFromFrame(
         s, idxDir, q.select("cell"), asOf)
       val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      // prunedCellScan normalizes cell to bigint on either layout, so the
+      // the scan normalizes cell to bigint on either layout, so the
       // probe frame's Long cells join unchanged
       val qKeyed = q
       val topk = index

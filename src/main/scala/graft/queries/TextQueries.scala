@@ -101,11 +101,12 @@ object TextQueries extends QueryPack {
     * buckets, so serve I/O tracks the query's posting lists and df
     * partials, never the corpus (df is vocab-sized — small next to
     * postings, but a full scan per query is still O(vocab) I/O serve
-    * has no right to). Both reads resolve the probed `tb=` dirs of
-    * every generation by a direct file-system listing first
-    * ([[graft.sources.Sinks.prunedPartitionRead]]), so a request never
-    * pays Spark's distributed listing of all 64 bucket dirs per
-    * generation; dl and stats still list one dir per generation. df
+    * has no right to). All four tables are read through
+    * [[graft.sources.Sinks.readGenerations]]: df and postings resolve
+    * only the probed `tb=` dirs of every generation, dl and stats one
+    * dir per generation, and no read runs a listing or schema job.
+    * `asOf` (t32) keeps every table to gen ≤ asOf and refuses when any
+    * of them has folded a generation past it. df
     * partials sum per token at serve time (the
     * t28 additive layout; a fresh t27 index is the single-partial
     * case), tokens summing to ≤0 drop (post-takedown ghosts, t29),
@@ -122,37 +123,6 @@ object TextQueries extends QueryPack {
     // an empty query is caller error — isin() over zero buckets would
     // quietly return an empty frame that LOOKS like "no matches"
     require(terms.nonEmpty, "bm25Serve: query terms must be non-empty")
-    // AS-OF serve (t32, the s18/d23 contract on the retrieval index):
-    // when the index carries a `gen` partition level, gen ≤ asOf is a
-    // SECOND static prune on the same scans — a past state is a subset
-    // union of immutable generation dirs, never a reconstruction.
-    // Compacted generations are gone by construction, so a snapshot at
-    // or before the manifest's max folded id REFUSES loudly instead of
-    // silently serving the folded (later) state.
-    // horizon = the max folded generation across ALL FOUR index tables
-    // — compaction is postings-led in-repo, but if df/dl/stats were
-    // ever compacted independently a postings-only check would silently
-    // serve the folded (later) state for those tables while the
-    // snapshot claims gen ≤ asOf; consulting every manifest makes the
-    // refusal hold whichever table folded first
-    for (g <- asOf) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      val horizon = Seq("postings", "df", "dl", "stats")
-        .flatMap(t => graft.sources.Sinks.maxFoldedGen(fs, s"$idx/$t"))
-      for (m <- horizon.maxOption if m > g)
-        throw new IllegalStateException(
-          s"as-of gen $g predates the compaction horizon $m of $idx — " +
-            "folded generations are not reconstructible; snapshot before " +
-            "compacting or keep more history")
-      // partition discovery types `gen` as int; a silent g.toInt would
-      // wrap past 2^31 batches and serve the wrong snapshot — refuse
-      require(g <= Int.MaxValue,
-        s"as-of gen $g exceeds the int partition-value range of $idx")
-    }
-    def genPrune(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      asOf.map(g => df.where(col("gen") <= lit(g.toInt))).getOrElse(df)
     val termsDf = s.createDataFrame(
       java.util.Arrays.asList(terms.map(t =>
         org.apache.spark.sql.Row(t)): _*),
@@ -162,10 +132,9 @@ object TextQueries extends QueryPack {
       .withColumn("tb", pmod(hash(col("token")), lit(64)))
     val buckets = termsDf.select("tb").collect().map(_.getInt(0))
       .distinct.sorted
-    def probedRead(t: String): org.apache.spark.sql.DataFrame =
-      genPrune(graft.sources.Sinks.prunedPartitionRead(
-          s, s"$idx/$t", "tb", buckets, asOf)
-        .where(col("tb").isin(buckets: _*)))
+    def read(t: String, probe: Option[(String, Seq[Int])] = None) =
+      graft.sources.Sinks.readGenerations(s, s"$idx/$t", asOf, probe)
+    def probedRead(t: String) = read(t, Some("tb" -> buckets.toSeq))
     val dfRead = probedRead("df")
     val postings = probedRead("postings")
     val served_pruned = graft.sources.Sinks.scansPrunedOn(postings, "tb") &&
@@ -173,14 +142,13 @@ object TextQueries extends QueryPack {
     val qdf = dfRead.join(broadcast(termsDf.select("token")), "token")
       .groupBy("token").agg(sum("df").as("df"))
       .where(col("df") > 0)
-    val stats = genPrune(s.read.parquet(s"$idx/stats"))
+    val stats = read("stats")
       .agg((sum(col("sum_dl")).cast("double") /
         sum(col("n")).cast("double")).as("avgdl"),
         sum(col("n")).as("n"))
     postings
       .join(broadcast(qdf), "token")
-      .join(genPrune(s.read.parquet(s"$idx/dl"))
-        .select(col("doc_id"), col("dl")), "doc_id")
+      .join(read("dl").select(col("doc_id"), col("dl")), "doc_id")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), bm25Contrib.as("c"))
       .groupBy("doc_id")

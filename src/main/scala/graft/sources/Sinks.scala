@@ -159,14 +159,17 @@ object Sinks {
     */
   def upsertBucketed(batch: DataFrame, path: String, keyCol: String,
                      numBuckets: Int = 64): Unit = {
-    upsertKeyed(batch.select(keyCol), keyCol, numBuckets, Seq(path -> batch))
+    upsertKeyed(batch.select(keyCol), keyCol, numBuckets, Seq(path -> (() => batch)))
     ()
   }
 
   /** Keyed landing of several tables that share one key set: in every
     * `(path, batch)` table, the rows whose key is in `keys` are replaced
     * by the batch's rows (which may be none), and every other row
-    * survives. Rows route to `numBuckets` partitions by key hash; only
+    * survives. Each batch is built by its own write, just before the
+    * write runs, so a landing of no keys, or a write skipped after a
+    * sibling failed, builds none (a frame that registers an
+    * `Observation` would otherwise stay registered in the session). Rows route to `numBuckets` partitions by key hash; only
     * the buckets the keys hash to are read or rewritten — untouched
     * buckets are never opened, so a landing costs |batch| + |touched
     * buckets|, not table size. A touched bucket left with no rows is
@@ -194,7 +197,7 @@ object Sinks {
     * does this naturally.
     */
   private[graft] def upsertKeyed(keys: DataFrame, keyCol: String, numBuckets: Int,
-                                 tables: Seq[(String, DataFrame)]): Long = {
+                                 tables: Seq[(String, () => DataFrame)]): Long = {
     val spark = keys.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -235,16 +238,17 @@ object Sinks {
     */
   private def landTouched(fs: org.apache.hadoop.fs.FileSystem, keys: DataFrame,
                           keyCol: String, numBuckets: Int, touched: Seq[Long],
-                          path: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val routed = batch.withColumn("__bucket", bucketOf(col(keyCol), numBuckets))
+                          path: String, batch: () => DataFrame): Unit = {
+    val spark = keys.sparkSession
     val exists = Files.exists(Paths.get(path))
+    val stored = if (exists) storedSchema(fs, Seq(new org.apache.hadoop.fs.Path(path))) else None
+    val routed = batch().withColumn("__bucket", bucketOf(col(keyCol), numBuckets))
     // partition pruning keeps the read to the touched buckets only; the
     // anti-join side is the landing's key set, not this batch's keys, so
     // a key whose new batch has no rows here loses its old ones
     val merged =
       if (!exists) routed
-      else routed.unionByName(storedSchema(fs, path)
+      else routed.unionByName(stored
         .fold(spark.read)(s => spark.read.schema(s.add("__bucket", "long")))
         .parquet(path)
         .where(col("__bucket").cast("long").isin(touched: _*))
@@ -291,19 +295,20 @@ object Sinks {
     fs.delete(tmp, true)
   }
 
-  /** The data schema Spark infers for an upserted table: the row schema
-    * Spark stores in one data file's footer, the file its own inference
-    * would read, read here without the Spark job inference runs for it.
-    * None when no data file carries one.
+  /** The data schema Spark would infer for a read of `dirs`: the row
+    * schema Spark stored in the footer of the first visible data file
+    * under them (depth first, in name order), read on the driver
+    * without the Spark job inference runs for it. None when no data
+    * file carries one.
     */
   private def storedSchema(fs: org.apache.hadoop.fs.FileSystem,
-                           path: String): Option[org.apache.spark.sql.types.StructType] = {
-    def visible(p: org.apache.hadoop.fs.Path) =
-      !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    fs.listStatus(new org.apache.hadoop.fs.Path(path)).iterator
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__bucket="))
-      .flatMap(d => fs.listStatus(d.getPath).iterator.filter(f => f.isFile && visible(f.getPath)))
-      .nextOption()
+                           dirs: Seq[org.apache.hadoop.fs.Path]): Option[org.apache.spark.sql.types.StructType] = {
+    def firstFile(p: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.FileStatus] = {
+      val (files, subdirs) = visibleChildren(fs, p).partition(_.isFile)
+      files.headOption.orElse(subdirs.sortBy(_.getPath.getName).iterator
+        .flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    dirs.iterator.filter(fs.exists).flatMap(firstFile).nextOption()
       .flatMap { f =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, fs.getConf))
@@ -617,11 +622,10 @@ object Sinks {
     * <partitionCol>=.../` generation — written to a hidden tmp sibling
     * first, then published with ONE atomic dir rename. A replayed
     * batchId is a pure skip (its gen dir exists) and a crashed
-    * half-write is invisible (hidden tmp). Serving readers resolve only
-    * the probed `<partitionCol>=` dirs of every visible generation
-    * ([[prunedPartitionRead]]) and read them with the root as base path,
-    * so discovery still surfaces (gen, partitionCol) and `gen` is
-    * dropped before use. The commit discipline behind the streaming
+    * half-write is invisible (hidden tmp). Readers go through
+    * [[readGenerations]], which resolves only the probed
+    * `<partitionCol>=` dirs of every visible generation. The commit
+    * discipline behind the streaming
     * IVF maintenance (s16, via VectorOps.committedCellAppend) and the
     * bucketed band index (d16).
     *
@@ -648,40 +652,56 @@ object Sinks {
   def committedAppend(df: DataFrame, indexDir: String, batchId: Long): Boolean =
     committedGenWrite(df, indexDir, batchId, None, preClustered = true)
 
-  /** The serving read of a partitioned store, generational
-    * (`gen=<id>/<partCol>=<v>/`) or flat (`<partCol>=<v>/`), restricted
-    * to the probed partition `values` BEFORE Spark lists anything: the
-    * root is listed once through the Hadoop FileSystem, the visible `gen=` dirs with
-    * gen ≤ `asOf` are kept (a flat store uses the root itself), each is
-    * listed once for the `<partCol>=<v>` dirs that exist, and only those
-    * leaf dirs are read, with `basePath = root` so `gen` and `partCol`
-    * are discovered from the paths with the same types as a whole-root
-    * read. A whole-root read of a store with more than 32 partition dirs
-    * per generation (Spark's parallel-discovery threshold) starts one
-    * distributed listing job per generation per request; this read
-    * starts none while it resolves to at most 32 leaf dirs.
+  /** The one read of a generational (`gen=<id>/[<partCol>=<v>/]`) or
+    * flat (`[<partCol>=<v>/]`) store, and the one place its as-of
+    * contract lives:
     *
-    * Callers keep their partition filter and `gen` horizon: the rows
-    * are the whole-root read's under those filters. When no probed dir
-    * exists it falls back to the whole-root read, where the caller's
-    * filter answers empty with the store's schema. A root holding both
-    * `gen=` dirs and other visible children refuses, as Spark's
-    * discovery does ("conflicting directory structures").
+    *  - `asOf` at or before the store's compaction horizon (the largest
+    *    batch id folded into its `__committed` manifest) refuses with
+    *    IllegalStateException: folded generations are not
+    *    reconstructible. An `asOf` past the int range refuses with
+    *    IllegalArgumentException, since discovery types `gen` as int
+    *    and a wrapped id would serve the wrong snapshot.
+    *  - The root is listed once through the Hadoop FileSystem; the
+    *    visible `gen=` dirs with gen ≤ `asOf` are kept (a flat store
+    *    reads its root), and with a `probe` (`partCol` → values) each
+    *    is listed once for the `<partCol>=<v>` dirs that exist. Only
+    *    those leaf dirs are read, with `basePath = root`, so `gen` and
+    *    `partCol` are discovered from the paths with the same types as
+    *    a whole-root read. A whole-root read of a store with more than
+    *    32 partition dirs per generation (Spark's parallel-discovery
+    *    threshold) starts one distributed listing job per generation;
+    *    this read starts none while it resolves to at most 32 leaf dirs.
+    *  - The data schema is the one Spark stored in the first data
+    *    file's footer, read on the driver ([[storedSchema]]), so no
+    *    schema-inference job runs; inference is left only for a store
+    *    with no data file.
+    *  - The partition filter and `gen ≤ asOf` apply to the frame, then
+    *    `gen` is dropped: the rows are the whole-root read's under
+    *    those filters. When no probed dir exists the whole root is
+    *    read, and the filters answer empty with the store's schema.
+    *
+    * A root holding both `gen=` dirs and other visible children
+    * refuses, as Spark's discovery does ("conflicting directory
+    * structures").
     */
-  def prunedPartitionRead(spark: SparkSession, root: String, partCol: String,
-                          values: Iterable[Int],
-                          asOf: Option[Long] = None): DataFrame = {
+  def readGenerations(spark: SparkSession, root: String,
+                      asOf: Option[Long] = None,
+                      probe: Option[(String, Iterable[Int])] = None): DataFrame = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
+    for (g <- asOf) {
+      for (m <- maxFoldedGen(fs, root) if m > g)
+        throw new IllegalStateException(
+          s"as-of gen $g predates the compaction horizon $m of $root — " +
+            "folded generations are not reconstructible; snapshot before " +
+            "compacting or keep more history")
+      require(g <= Int.MaxValue,
+        s"as-of gen $g exceeds the int partition-value range of $root")
+    }
     val rootP = new org.apache.hadoop.fs.Path(root)
-    // Spark's hidden-path rule: `_x` (not a partition dir) and `.x`
-    def visible(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
-      }
     val children =
-      if (fs.exists(rootP)) visible(rootP)
+      if (fs.exists(rootP)) visibleChildren(fs, rootP)
       else Array.empty[org.apache.hadoop.fs.FileStatus]
     val (gens, others) = children.partition(st =>
       st.isDirectory && st.getPath.getName.startsWith("gen="))
@@ -690,18 +710,34 @@ object Sinks {
         s"conflicting directory structures under $root: gen= dirs next to " +
           others.map(_.getPath.getName).sorted.mkString(", ") +
           " — a store is either generational or flat, never both")
-    val wanted = values.map(v => s"$partCol=$v").toSet
-    def probed(sts: Array[org.apache.hadoop.fs.FileStatus]) =
-      sts.filter(st => st.isDirectory && wanted(st.getPath.getName))
-        .map(_.getPath.toString)
-    val leaves =
-      if (gens.isEmpty) probed(children)
-      else gens
-        .filter(st => asOf.forall(st.getPath.getName.stripPrefix("gen=").toLong <= _))
-        .flatMap(st => probed(visible(st.getPath)))
-    if (leaves.isEmpty) spark.read.parquet(root)
-    else spark.read.option("basePath", root).parquet(leaves.sorted.toSeq: _*)
+    val dirs = gens.toSeq
+      .filter(st => asOf.forall(st.getPath.getName.stripPrefix("gen=").toLong <= _))
+      .map(_.getPath)
+    val leaves = probe match {
+      case None => if (gens.isEmpty) Seq(rootP) else dirs
+      case Some((c, vs)) =>
+        val wanted = vs.map(v => s"$c=$v").toSet
+        def probed(sts: Seq[org.apache.hadoop.fs.FileStatus]) =
+          sts.filter(st => st.isDirectory && wanted(st.getPath.getName)).map(_.getPath)
+        if (gens.isEmpty) probed(children.toSeq)
+        else dirs.flatMap(d => probed(visibleChildren(fs, d).toSeq))
+    }
+    val paths = if (leaves.isEmpty) Seq(rootP) else leaves.sortBy(_.toString)
+    val read = storedSchema(fs, paths).fold(spark.read)(spark.read.schema)
+      .option("basePath", root).parquet(paths.map(_.toString): _*)
+    val probed = probe.fold(read) { case (c, vs) => read.where(col(c).isin(vs.toSeq: _*)) }
+    asOf.fold(probed)(g => probed.where(col("gen") <= lit(g.toInt))).drop("gen")
   }
+
+  /** A dir's children under Spark's hidden-path rule: `.x`, and `_x`
+    * unless it is a partition dir (`_x=v`).
+    */
+  private def visibleChildren(fs: org.apache.hadoop.fs.FileSystem,
+                              p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }
 
   /** Did every file scan of `df`'s executed plan prune on the partition
     * column `partCol`? Read from the scans' `partitionFilters`, so the
@@ -923,7 +959,7 @@ object Sinks {
     * as-of read horizon (a compacted generation is not reconstructible,
     * so snapshot reads at or before it must refuse).
     */
-  private[graft] def maxFoldedGen(fs: org.apache.hadoop.fs.FileSystem,
+  private def maxFoldedGen(fs: org.apache.hadoop.fs.FileSystem,
                                   indexDir: String): Option[Long] = {
     val ids = foldedIds(fs, indexDir)
     if (ids.isEmpty) None else Some(ids.max)

@@ -111,15 +111,18 @@ class WaveLandingSpec extends SparkSpec {
     val root = Files.createTempDirectory("keyed_empty").toString
     val (a, b) = (s"$root/a", s"$root/b")
     Sinks.upsertKeyed(Seq(1L, 2L).toDF("id"), "id", 4,
-      Seq(a -> Seq((1L, "a1"), (2L, "a2")).toDF("id", "v"), b -> Seq((1L, "b1")).toDF("id", "v")))
+      Seq(a -> (() => Seq((1L, "a1"), (2L, "a2")).toDF("id", "v")),
+        b -> (() => Seq((1L, "b1")).toDF("id", "v"))))
     // key 1 redelivered with no b rows: b is left with none, so it goes
     Sinks.upsertKeyed(Seq(1L).toDF("id"), "id", 4,
-      Seq(a -> Seq((1L, "A1")).toDF("id", "v"), b -> Seq.empty[(Long, String)].toDF("id", "v")))
+      Seq(a -> (() => Seq((1L, "A1")).toDF("id", "v")),
+        b -> (() => Seq.empty[(Long, String)].toDF("id", "v"))))
     assert(!Files.exists(java.nio.file.Paths.get(b)), "an emptied table is removed")
     assert(Sinks.readUpserted(spark, a).as[(Long, String)].collect().toSet ==
       Set(1L -> "A1", 2L -> "a2"))
     Sinks.upsertKeyed(Seq(2L).toDF("id"), "id", 4,
-      Seq(a -> Seq((2L, "A2")).toDF("id", "v"), b -> Seq((2L, "B2")).toDF("id", "v")))
+      Seq(a -> (() => Seq((2L, "A2")).toDF("id", "v")),
+        b -> (() => Seq((2L, "B2")).toDF("id", "v"))))
     assert(Sinks.readUpserted(spark, b).as[(Long, String)].collect().toSet == Set(2L -> "B2"))
   }
 
@@ -170,7 +173,7 @@ class WaveLandingSpec extends SparkSpec {
         Sinks.upsertKeyed(sectioned.select("decision_id"), "decision_id", 16,
           CorpusPipeline.waveTables(spark, docs, sectioned, "default",
               Observation(), Observation()).map {
-            case ("people", df) => s"$out/people" -> df.withColumn("name", boom(col("name")))
+            case ("people", df) => s"$out/people" -> (() => df().withColumn("name", boom(col("name"))))
             case (t, df) => s"$out/$t" -> df
           })
       } finally { marker(atUnpersist); sectioned.unpersist(); docs.unpersist() }
@@ -212,5 +215,33 @@ class WaveLandingSpec extends SparkSpec {
     val one = jobsOf(Sinks.upsertBucketed(batch, path, "id", 16))
     info(s"one-table upsert: $one jobs")
     assert(one < 7, s"a one-table upsert launched $one Spark jobs")
+  }
+
+  /** Observations the session's manager holds for queries not yet run */
+  private def registeredObservations(): Int = {
+    val manager = spark.getClass.getMethod("observationManager").invoke(spark)
+    val field = manager.getClass.getDeclaredField("observations")
+    field.setAccessible(true)
+    field.get(manager).asInstanceOf[java.util.Map[_, _]].size
+  }
+
+  test("empty waves register no Observation with the session") {
+    val docs = CorpusPipeline.ingest(spark, landing(wave1)).where(lit(false)).persist()
+    val sectioned = CorpusPipeline.splitSections(docs, "default").persist()
+    val out = Files.createTempDirectory("wave_empty").toString
+    try {
+      val before = registeredObservations()
+      for (_ <- 1 to 20)
+        assert(CorpusPipeline.landWave(spark, docs, sectioned, out, "default") ==
+          CorpusPipeline.Landed(0L, 0L, 0L))
+      // (≤: a query of an earlier test may still be completing its own)
+      assert(registeredObservations() <= before,
+        "an empty wave left its observations registered")
+    } finally { sectioned.unpersist(); docs.unpersist() }
+    // a landing wave still reports what it observed, and leaves none behind
+    val before = registeredObservations()
+    val w = CorpusPipeline.run(spark, landing(wave1), out)
+    assert(w.nIngested == 6 && w.nCitations == 6)
+    assert(registeredObservations() <= before)
   }
 }

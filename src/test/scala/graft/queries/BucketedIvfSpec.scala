@@ -164,8 +164,8 @@ class BucketedIvfSpec extends SparkSpec {
       .map(_.getName).toSet === Set("gen=-1"))
   }
 
-  test("probed-cell size dispatch (r14 directive 2): literal In below " +
-       "graft.ivf.isinMaxCells, broadcast LEFT SEMI above — same rows, " +
+  test("probed-cell size dispatch (r14 directive 2): literal In up to " +
+       "128 probed cells, broadcast LEFT SEMI above — same rows, " +
        "bucket partition prune static either way") {
     import spark.implicits._
     val dir = Scratch.dir("bivf_semi_").resolve("ivf").toString
@@ -175,7 +175,8 @@ class BucketedIvfSpec extends SparkSpec {
     // files, ADVICE r13) but below the default semi-join threshold
     val probed = Array(3L, 11L, 19L, 27L, 35L, 43L, 51L, 59L, 67L, 75L,
       83L, 91L)
-    val lit12 = graft.operators.VectorOps.prunedCellScan(spark, dir, probed)
+    val lit12 = graft.operators.VectorOps.prunedCellScanFromFrame(spark, dir,
+      probed.toSeq.toDF("cell"))
     val pLit = lit12.queryExecution.executedPlan.toString
     assert(pLit.contains("PartitionFilters: [") && pLit.contains("cell_bucket"))
     assert(pLit.contains("In(cell") || pLit.contains("isin"),
@@ -183,20 +184,24 @@ class BucketedIvfSpec extends SparkSpec {
     assert(lit12.select("cell").distinct().as[Long].collect().toSet ===
       probed.toSet, "production-width (>10-cell) probe must stay correct " +
         "through parquet's In->range pushdown fallback")
-    // force the big-batch path: threshold below the probe width
-    spark.conf.set("graft.ivf.isinMaxCells", "4")
-    try {
-      val semi = graft.operators.VectorOps.prunedCellScan(spark, dir, probed)
-      val pSemi = semi.queryExecution.executedPlan.toString
-      assert(pSemi.contains("PartitionFilters: [") && pSemi.contains("cell_bucket"),
-        s"the bucket partition prune must stay STATIC on the semi-join path:\n$pSemi")
-      assert(pSemi.contains("LeftSemi"),
-        s"expected a broadcast left-semi cell filter above the threshold:\n$pSemi")
-      assert(!pSemi.contains("In(cell"),
-        s"the semi-join path must not also inflate the plan with cell literals:\n$pSemi")
-      assert(semi.collect().map(_.toSeq).toSet === lit12.collect().map(_.toSeq).toSet,
-        "the two dispatch arms must return identical rows")
-    } finally spark.conf.unset("graft.ivf.isinMaxCells")
+    // the big-batch path: 150 probed cells (buckets 0-5 of 8) is
+    // above the 128-cell literal bound
+    val many = (0L until 200L).filter(_ % 8 < 6)
+    val semi = graft.operators.VectorOps.prunedCellScanFromFrame(spark, dir,
+      many.toDF("cell"))
+    val pSemi = semi.queryExecution.executedPlan.toString
+    assert(pSemi.contains("PartitionFilters: [") && pSemi.contains("cell_bucket"),
+      s"the bucket partition prune must stay STATIC on the semi-join path:\n$pSemi")
+    assert(pSemi.contains("LeftSemi"),
+      s"expected a broadcast left-semi cell filter above the threshold:\n$pSemi")
+    assert(!pSemi.contains("In(cell"),
+      s"the semi-join path must not also inflate the plan with cell literals:\n$pSemi")
+    // the literal arm over two halves of the same cells
+    val (lo, hi) = many.splitAt(many.size / 2)
+    val viaLiteral = Seq(lo, hi).flatMap(h => graft.operators.VectorOps
+      .prunedCellScanFromFrame(spark, dir, h.toDF("cell")).collect().map(_.toSeq)).toSet
+    assert(semi.collect().map(_.toSeq).toSet === viaLiteral,
+      "the two dispatch arms must return identical rows")
   }
 
   test("layout marker records the cell TYPE (r14 directive 8): a store " +
@@ -208,8 +213,8 @@ class BucketedIvfSpec extends SparkSpec {
     val dirOk = Scratch.dir("bivf_type_ok_").resolve("ivf").toString
     synthStore(dirOk, cells = 10, buckets = 4)
     assert(graft.sources.Sinks.readLayoutCellType(fs, dirOk) === Some("bigint"))
-    assert(graft.operators.VectorOps.prunedCellScan(spark, dirOk, Array(3L))
-      .count() > 0)
+    assert(graft.operators.VectorOps.prunedCellScanFromFrame(spark, dirOk,
+      Seq(3L).toDF("cell")).count() > 0)
     // a store whose files landed int-typed (the b76ab6a truncation
     // class, planted here by hand) refuses at serve time
     val dirBad = Scratch.dir("bivf_type_bad_").resolve("ivf").toString
@@ -218,7 +223,7 @@ class BucketedIvfSpec extends SparkSpec {
       .toDF("vec_id", "cell", "cell_bucket")
       .write.partitionBy("cell_bucket").parquet(s"$dirBad/gen=-1")
     val err = intercept[IllegalArgumentException] {
-      graft.operators.VectorOps.prunedCellScan(spark, dirBad, Array(3L))
+      graft.operators.VectorOps.prunedCellScanFromFrame(spark, dirBad, Seq(3L).toDF("cell"))
     }
     assert(err.getMessage.contains("cell type"))
     // and a WRITER declaring a different type refuses at the marker
@@ -239,10 +244,10 @@ class BucketedIvfSpec extends SparkSpec {
     VectorOps.committedCellAppendAuto(df, dir, -1L, nlist = 150)
     VectorOps.committedCellAppendAuto(df.where(col("vec_id") < 60), dir, 0L,
       nlist = 150)
-    // the serve reads through prunedCellScan with the probe frame's
-    // collected cells — assert the executed plan from the REAL path
-    val served = graft.operators.VectorOps.prunedCellScan(spark, dir,
-      Array(7L, 23L))
+    // the serve reads through prunedCellScanFromFrame — assert the
+    // executed plan from the REAL path
+    val served = graft.operators.VectorOps.prunedCellScanFromFrame(spark, dir,
+      Seq(7L, 23L).toDF("cell"))
     val p = served.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [") && p.contains("cell_bucket"),
       s"dist serve must keep the static bucket prune:\n$p")
@@ -259,34 +264,32 @@ class BucketedIvfSpec extends SparkSpec {
       Set(7L, 23L))
   }
 
-  test("frame-driven serve scan (round-15): bounded driver payload, both " +
-       "dispatch arms row-identical to the array form") {
+  test("frame-driven serve scan: bounded driver payload, both dispatch " +
+       "arms row-identical to the whole-store read") {
     import spark.implicits._
     val dir = Scratch.dir("bivf_frame_").resolve("ivf").toString
     synthStore(dir, cells = 200, buckets = 8)
-    val probed = Array(3L, 11L, 19L, 27L, 35L, 43L, 51L, 59L, 67L, 75L,
-      83L, 91L)
-    val probeDf = probed.toSeq.toDF("cell")
-    val viaArray = graft.operators.VectorOps.prunedCellScan(spark, dir, probed)
+    def wholeStore(cells: Seq[Long]) = spark.read.parquet(dir)
+      .where(col("cell").isin(cells: _*)).drop("cell_bucket", "gen")
       .collect().map(_.toSeq).toSet
-    // small probe: the limit(isinMax+1) slice fits → the literal arm
+    val probed = Seq(3L, 11L, 19L, 27L, 35L, 43L, 51L, 59L, 67L, 75L,
+      83L, 91L)
+    // small probe: the limit(129) slice fits → the literal arm
     val small = graft.operators.VectorOps
-      .prunedCellScanFromFrame(spark, dir, probeDf)
+      .prunedCellScanFromFrame(spark, dir, probed.toDF("cell"))
     assert(small.queryExecution.executedPlan.toString.contains("In(cell") ||
       small.queryExecution.executedPlan.toString.contains("isin"))
-    assert(small.collect().map(_.toSeq).toSet === viaArray)
-    // forced-big probe: only buckets (≤ B) cross the driver; the cell
-    // filter is the broadcast semi-join fed from the FRAME
-    spark.conf.set("graft.ivf.isinMaxCells", "4")
-    try {
-      val big = graft.operators.VectorOps
-        .prunedCellScanFromFrame(spark, dir, probeDf)
-      val p = big.queryExecution.executedPlan.toString
-      assert(p.contains("PartitionFilters: [") && p.contains("cell_bucket"),
-        s"the static bucket prune must survive the frame path:\n$p")
-      assert(p.contains("LeftSemi"), s"expected the semi-join arm:\n$p")
-      assert(big.collect().map(_.toSeq).toSet === viaArray)
-    } finally spark.conf.unset("graft.ivf.isinMaxCells")
+    assert(small.collect().map(_.toSeq).toSet === wholeStore(probed))
+    // big probe (150 cells in buckets 0-5): only buckets (≤ B) cross the
+    // driver; the cell filter is the broadcast semi-join fed from the FRAME
+    val many = (0L until 200L).filter(_ % 8 < 6)
+    val big = graft.operators.VectorOps
+      .prunedCellScanFromFrame(spark, dir, many.toDF("cell"))
+    val p = big.queryExecution.executedPlan.toString
+    assert(p.contains("PartitionFilters: [") && p.contains("cell_bucket"),
+      s"the static bucket prune must survive the frame path:\n$p")
+    assert(p.contains("LeftSemi"), s"expected the semi-join arm:\n$p")
+    assert(big.collect().map(_.toSeq).toSet === wholeStore(many))
   }
 
   test("the bucketed serve equals the flat serve (layout invisible in " +

@@ -8,11 +8,12 @@ import graft.sources.Sinks
 import graft.tools.GenLayoutProbe.countListingJobs
 
 /** The serving reads of generational stores resolve their probed
-  * partition dirs by a direct listing (`Sinks.prunedPartitionRead`): BM25
+  * partition dirs by a direct listing (`Sinks.readGenerations`): BM25
   * serve and the bucketed IVF cell scan answer exactly as the
   * whole-root read with the same partition filter does, on every
-  * layout a store can have, and start no distributed listing job even
-  * when a generation holds 64 partition dirs.
+  * layout a store can have, start no distributed listing job even
+  * when a generation holds 64 partition dirs, and keep the reader's
+  * as-of contract.
   */
 class PrunedServeSpec extends SparkSpec {
   import spark.implicits._
@@ -164,7 +165,7 @@ class PrunedServeSpec extends SparkSpec {
       .parquet(root)
     intercept[Throwable](spark.read.parquet(root).collect())
     val e = intercept[IllegalStateException](
-      Sinks.prunedPartitionRead(spark, root, "tb", Seq(3)))
+      Sinks.readGenerations(spark, root, probe = Some("tb" -> Seq(3))))
     assert(e.getMessage.contains("conflicting directory structures"))
   }
 
@@ -178,7 +179,7 @@ class PrunedServeSpec extends SparkSpec {
     dir
   }
 
-  /** prunedCellScan over the whole root with its partition and cell
+  /** the cell scan over the whole root with its partition and cell
     * filters
     */
   private def wholeRootCells(dir: String, probed: Seq[Long], b: Int,
@@ -189,19 +190,16 @@ class PrunedServeSpec extends SparkSpec {
     asOf.fold(d)(a => d.where(col("gen") <= a.toInt)).drop("gen")
   }
 
-  test("prunedCellScan equals the whole-root read: 2 generations, as-of, " +
+  test("prunedCellScanFromFrame equals the whole-root read: 2 generations, as-of, " +
        "a bucket missing from one generation, every bucket missing") {
     // nlist 16 → 16 buckets; gen 1 never writes cells 5 and 9
     val dir = ivfStore(Seq((0L until 16L), (0L until 16L).filter(c => c != 5 && c != 9)), 16)
     def same(probed: Seq[Long], asOf: Option[Long] = None): Array[Row] = {
       val want = wholeRootCells(dir, probed, 16, asOf)
-      for (got <- Seq(
-             VectorOps.prunedCellScan(spark, dir, probed.toArray, asOf),
-             VectorOps.prunedCellScanFromFrame(spark, dir, probed.toDF("cell"), asOf))) {
-        assert(got.schema == want.schema)
-        assert(got.collect().sortBy(_.getLong(0)).toSeq ==
-          want.collect().sortBy(_.getLong(0)).toSeq, s"cells $probed asOf=$asOf")
-      }
+      val got = VectorOps.prunedCellScanFromFrame(spark, dir, probed.toDF("cell"), asOf)
+      assert(got.schema == want.schema)
+      assert(got.collect().sortBy(_.getLong(0)).toSeq ==
+        want.collect().sortBy(_.getLong(0)).toSeq, s"cells $probed asOf=$asOf")
       want.collect()
     }
     assert(same(Seq(2L, 11L)).map(_.getLong(0)).exists(_ >= 10000))
@@ -209,7 +207,7 @@ class PrunedServeSpec extends SparkSpec {
     assert(same(Seq(5L)).forall(_.getLong(0) < 10000)) // bucket 5 only in gen 0
     // cells 21 and 25 fall in buckets 5 and 9 but no generation holds them
     val dir2 = ivfStore(Seq((0L until 16L).filter(c => c != 5 && c != 9)), 16)
-    val got = VectorOps.prunedCellScan(spark, dir2, Array(21L, 25L))
+    val got = VectorOps.prunedCellScanFromFrame(spark, dir2, Seq(21L, 25L).toDF("cell"))
     assert(got.isEmpty && got.schema == wholeRootCells(dir2, Seq(21L, 25L), 16, None).schema)
   }
 
@@ -235,5 +233,32 @@ class PrunedServeSpec extends SparkSpec {
       VectorOps.prunedCellScanFromFrame(spark, ivf, Seq(3L, 40L).toDF("cell")).collect()
     }
     assert(hits.length == 12 && lists == 0, s"$lists listing jobs in one IVF serve")
+  }
+
+  test("as-of refuses when any one BM25 table folded past it: only dl, " +
+       "only stats") {
+    for (t <- Seq("dl", "stats")) {
+      val idx = bm25Index(Seq(docs(0, 20, 20, vocab, 11), docs(100, 20, 20, vocab, 12)))
+      assert(TextQueries.bm25Serve(spark, idx, Seq("w1"), 5, Some(0L)).collect().nonEmpty)
+      Sinks.compactGenerations(spark, s"$idx/$t", None)
+      val e = intercept[IllegalStateException](
+        TextQueries.bm25Serve(spark, idx, Seq("w1"), 5, Some(0L)))
+      assert(e.getMessage.contains(s"$idx/$t"), e.getMessage)
+      // the head serve still answers over the folded table
+      assert(TextQueries.bm25Serve(spark, idx, Seq("w1"), 5).collect().nonEmpty)
+    }
+  }
+
+  test("an as-of past the int range of gen refuses: BM25 serve and cell scan") {
+    val past = Int.MaxValue.toLong + 1
+    val idx = bm25Index(Seq(docs(0, 20, 20, vocab, 13)))
+    intercept[IllegalArgumentException](
+      TextQueries.bm25Serve(spark, idx, Seq("w1"), 5, Some(past)))
+    val ivf = ivfStore(Seq(0L until 16L), 16)
+    intercept[IllegalArgumentException](
+      VectorOps.prunedCellScanFromFrame(spark, ivf, Seq(3L).toDF("cell"), Some(past)))
+    // the largest int gen still serves
+    assert(VectorOps.prunedCellScanFromFrame(spark, ivf, Seq(3L).toDF("cell"),
+      Some(Int.MaxValue.toLong)).count() == 3)
   }
 }
