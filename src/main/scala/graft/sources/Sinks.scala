@@ -169,8 +169,9 @@ object Sinks {
     * survives. Each batch is built by its own write, just before the
     * write runs, so a landing of no keys, or a write skipped after a
     * sibling failed, builds none (a frame that registers an
-    * `Observation` would otherwise stay registered in the session). Rows route to `numBuckets` partitions by key hash; only
-    * the buckets the keys hash to are read or rewritten — untouched
+    * `Observation` would otherwise stay registered in the session).
+    * Rows route to `numBuckets` partitions by key hash; only the
+    * buckets the keys hash to are read or rewritten — untouched
     * buckets are never opened, so a landing costs |batch| + |touched
     * buckets|, not table size. A touched bucket left with no rows is
     * retired, and a table left with no bucket is removed, as if never
@@ -678,7 +679,7 @@ object Sinks {
     *    with no data file.
     *  - The partition filter and `gen ≤ asOf` apply to the frame, then
     *    `gen` is dropped: the rows are the whole-root read's under
-    *    those filters. When no probed dir exists the whole root is
+    *    those filters. When no leaf dir is left the whole root is
     *    read, and the filters answer empty with the store's schema.
     *
     * A root holding both `gen=` dirs and other visible children
