@@ -259,8 +259,11 @@ object PlanDump {
     * regenerated PLANS.md differs only where a plan did: expression ids
     * (`#10696L`), `plan_id`s and RDD ids (`MapPartitionsRDD[1192]`) are
     * renumbered in first-seen order, scratch-dir random suffixes
-    * (`/tmp/graft_x22_landing_<n>`) become `<n>`, and lambda class
-    * names lose their JVM-assigned numbers and hash.
+    * (`/tmp/graft_x22_landing_<n>`) become `<n>`, lambda class names
+    * lose their JVM-assigned numbers and hash, and the runtime
+    * statistics AQE prints on query stages
+    * (`Statistics(sizeInBytes=…, rowCount=…)`) become `<n>`: they are
+    * measured per run, not part of the plan's shape.
     */
   def normalize(plan: String): String = {
     // group 1 of `re` is the id; `fmt` rebuilds the match around its
@@ -276,7 +279,9 @@ object PlanDump {
       renumber(_, """plan_id=(\d+)""".r, (i, _) => s"plan_id=$i"),
       renumber(_, """RDD\[(\d+)\]""".r, (i, _) => s"RDD[$i]"),
       _.replaceAll("""(/[\w.-]*_)\d{6,}""", "$1<n>"),
-      _.replaceAll("""\$\$Lambda[$\w/]*(@[0-9a-f]+)?""", """\$\$Lambda"""))
+      _.replaceAll("""\$\$Lambda[$\w/]*(@[0-9a-f]+)?""", """\$\$Lambda"""),
+      _.replaceAll("""(Statistics\(sizeInBytes=)[^,)]+""", "$1<n>")
+        .replaceAll("""(Statistics\(sizeInBytes=<n>, rowCount=)[^)]+""", "$1<n>"))
     steps.foldLeft(plan)((s, f) => f(s))
   }
 

@@ -46,6 +46,18 @@ class PlanNormalizeSpec extends AnyFunSuite {
     assert(PlanDump.normalize("x#50L = y#7 AND z#7\n") != PlanDump.normalize("x#50L = y#7 AND z#50L\n"))
   }
 
+  test("AQE query-stage statistics read the same across runs") {
+    def stage(size: String, rows: String) =
+      s"+- ShuffleQueryStage (6), Statistics(sizeInBytes=$size, rowCount=$rows)\n" +
+        s"+- BroadcastQueryStage (9), Statistics(sizeInBytes=$size)\n"
+    val a = PlanDump.normalize(stage("228.2 KiB", "1.91E+3"))
+    assert(a == PlanDump.normalize(stage("64.5 MiB", "1.92E+3")))
+    assert(a == "+- ShuffleQueryStage (6), Statistics(sizeInBytes=<n>, rowCount=<n>)\n" +
+      "+- BroadcastQueryStage (9), Statistics(sizeInBytes=<n>)\n")
+    // the stage kind and its number are the plan's shape: they stay
+    assert(a != PlanDump.normalize(stage("1 B", "1").replace("(6)", "(7)")))
+  }
+
   test("short numbers and plain text are left alone") {
     val text = "Arguments: hashpartitioning(l_partkey, 4), Input [3], /tmp/graft_k12_b/orders\n"
     assert(PlanDump.normalize(text) == text)
