@@ -73,8 +73,8 @@ import graft.sources.Sinks
   * the identity), and the terminal distinct() collapses them.
   *
   * Band-store compaction (thousands of gen dirs at streaming cadence)
-  * is the d15 story — Sinks.compact with sibling commit markers — and
-  * is deliberately not duplicated here.
+  * is the dedup index's (d15/d19): Sinks.compactGenerations with the
+  * folded batch ids in its `__committed` manifest — not duplicated here.
   */
 object KeepListStore {
 

@@ -302,78 +302,15 @@ object MinHashLSH {
     }
   }
 
-  /** INCREMENTAL dedup of a new batch against a PERSISTED band index —
-    * the shape a 100 TB deployment actually runs: the corpus was
-    * fingerprinted ONCE (its (id, band, h) rows live as a parquet
-    * index), and when a new crawl batch lands only the BATCH is hashed.
-    * The index is probed with an equi-join on (band, h) where the batch
-    * side is broadcast — one map-side pass over the index scan, no
-    * corpus shuffle, no corpus re-hash. Within-batch duplicates use the
-    * keep-first rule (a batch doc is a dup of any smaller-id batch doc
-    * sharing a bucket).
-    *
-    * Returns one row per batch document:
-    *   (idCol, dup_of_corpus, dup_in_batch, admitted)
-    * and, when `appendAdmitted`, APPENDS the admitted documents' band
-    * rows to the index — the maintenance step that makes the next
-    * batch's probe see this batch's survivors. The replay invariant is
-    * that re-running the same batch after the append ADMITS NOTHING
-    * (at-least-once delivery cannot double-ingest): admitted docs now
-    * hit their own appended bands (dup_of_corpus), and rejected docs
-    * are rejected again — though a doc whose only collision partner
-    * was itself rejected comes back as dup_in_batch, not
-    * dup_of_corpus, so `admitted`, not `dup_of_corpus`, is the replay
-    * signal (IncrementalDedupSpec pins both the invariant and that
-    * counterexample).
-    *
-    * At scale the index would additionally be bucketed by `h` so the
-    * probe prunes to matching buckets; the append-only layout means
-    * maintenance cost tracks |batch|, never |corpus|.
-    *
-    * NOTE on durability: this method appends BEFORE the caller can
-    * persist the verdicts, so an at-least-once caller (foreachBatch)
-    * that crashes between the append and its own verdict write would
-    * re-judge the replayed batch against its own bands. Streaming
-    * callers must use [[committedIncrementalDedup]], which commits the
-    * verdict output idempotently keyed by batchId first.
-    */
-  def incrementalDedup(batchBands: DataFrame, idCol: String,
-                       indexDir: String,
-                       appendAdmitted: Boolean = true): DataFrame = {
-    val spark = batchBands.sparkSession
-    val bb = batchBands.select(col(idCol), col("band"), col("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // capture the index listing BEFORE any append so the result is
-    // stable however late the plan executes. materializeVerdicts
-    // eagerly counts a LogicalRDD re-wrap (convergeKeepList's
-    // discipline) — LOAD-BEARING here, not just lineage hygiene: a
-    // directly-persisted verdict plan would be registered in the
-    // CacheManager keyed on the index path, and the append's
-    // refreshByPath would RECOMPUTE that cache against the post-append
-    // listing — the verdicts would silently flip to "all
-    // dup_of_corpus". The RDD wrapper pins the pre-append listing, and
-    // the eager count lets the big band cache drop NOW (a long-running
-    // stream must not accumulate pinned band frames).
-    val res = materializeVerdicts(bb, idCol, spark.read.parquet(indexDir))
-    if (appendAdmitted)
-      admittedBands(bb, res, idCol)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(indexDir)
-    bb.unpersist()
-    res
-  }
-
-  /** BUCKETED band-index layout — the 100 TB serving shape the flat
-    * index's doc promises ("at scale the index would additionally be
-    * bucketed by `h` so the probe prunes to matching buckets"), now
-    * real: band rows carry `hb = pmod(xxhash64(h), numBuckets)` and the
-    * index is laid out `gen=<batch>/hb=<n>/` (generations via
+  /** The band index's layout: band rows carry
+    * `hb = pmod(xxhash64(h), numBuckets)` and the index is laid out
+    * `gen=<batch>/hb=<n>/` (generations via
     * [[graft.sources.Sinks.committedPartitionedAppend]] — exactly-once
     * appends, backfill at gen=-1). A batch's probe touches at most
     * |batch|·k DISTINCT hb values, so the index scan PARTITION-PRUNES
-    * to those directories — probe I/O tracks |batch|, never |corpus|,
-    * where the flat layout pays a full map-only index scan per batch.
-    * Verdicts are unchanged (hb is a pure function of h: pruned rows
-    * cannot collide with the batch), so d16 shares d13's oracle.
+    * to those directories — probe I/O tracks |batch|, never |corpus|.
+    * hb is a pure function of h, so a pruned row can never collide
+    * with the batch: pruning cannot change a verdict.
     *
     * `numBuckets` is part of the index's LAYOUT CONTRACT (the
     * upsertBucketed precedent): it is chosen once at [[buildBucketedIndex]]
@@ -419,57 +356,53 @@ object MinHashLSH {
       org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration), indexDir)
 
-  /** The pruned index read the bucketed probe runs: only the probed
-    * `hb=` dirs of every generation, through the one store reader
+  /** The pruned index read the probe runs: only the probed `hb=` dirs
+    * of every generation, through the one store reader
     * ([[graft.sources.Sinks.readGenerations]]) — exposed so specs can
     * pin the PartitionFilters on the very plan the operator executes
-    * (the executed gate result is a LogicalRDD wrapper).
+    * (the entry returns the committed verdicts, whose plan is a read of
+    * the verdict dir).
     */
   private[graft] def prunedBucketedIndex(spark: org.apache.spark.sql.SparkSession,
                                          indexDir: String,
                                          probedHb: Seq[Int]): DataFrame =
     graft.sources.Sinks.readGenerations(spark, indexDir, probe = Some("hb" -> probedHb))
 
-  /** Incremental dedup against the BUCKETED index: collect the batch's
-    * distinct hb set (bounded by |batch|·k) under the index's recorded
-    * bucket count, prune the index scan to those partitions, and run
-    * the same verdict plan as the flat layout. `appendAdmitted` lands
-    * the admitted bands as this batch's generation — idempotent per
-    * batchId (a replayed id is a pure skip), but NOTE the same
-    * caller-side crash window as the flat [[incrementalDedup]]: the
-    * append lands before the caller can persist the verdicts, so an
-    * at-least-once caller must use [[committedIncrementalDedupBucketed]],
-    * which commits the verdicts first.
-    */
-  def incrementalDedupBucketed(batchBands: DataFrame, idCol: String,
-                               indexDir: String, batchId: Long,
-                               appendAdmitted: Boolean = true): DataFrame = {
-    val spark = batchBands.sparkSession
-    val nb = bucketCount(spark, indexDir)
-    val bb = withHashBucket(
-        batchBands.select(col(idCol), col("band"), col("h")), nb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probedHb = bb.select("hb").distinct().collect().map(_.getInt(0)).sorted
-    val idx = prunedBucketedIndex(spark, indexDir, probedHb.toSeq)
-      .select(col(idCol), col("band"), col("h"))
-    val res = materializeVerdicts(bb.select(col(idCol), col("band"), col("h")),
-      idCol, idx)
-    if (appendAdmitted)
-      graft.sources.Sinks.committedPartitionedAppend(
-        admittedBands(bb, res, idCol), indexDir, batchId, "hb")
-    bb.unpersist()
-    res
-  }
-
-  /** Crash-atomic face of the bucketed layout (the e18 protocol, one
-    * step simpler): verdicts commit atomically under
-    * `verdictDir/batch=<batchId>` FIRST, then the admitted bands land
-    * as the batch's generation — and the gen dir itself is the
-    * completion marker (its rename is atomic and keyed by batchId, so
-    * no sibling marker or delta file is needed). Replay matrix: before
-    * the verdict commit → recompute against the untouched index;
-    * between the two renames → trust the stored verdict, redo the
-    * append (pure skip if the gen landed); after both → pure skip.
+  /** INCREMENTAL dedup of a new batch against the persisted band
+    * index, the one dedup entry for batch and streaming callers alike:
+    * the corpus was fingerprinted ONCE ([[buildBucketedIndex]]), and
+    * when a batch lands only the BATCH is hashed. The probe reads only
+    * the batch's `hb` dirs ([[prunedBucketedIndex]]) and joins them on
+    * (band, h) with the batch side broadcast — no corpus shuffle, no
+    * corpus re-hash. Within-batch duplicates use keep-first (a batch
+    * doc is a dup of any smaller-id batch doc sharing a bucket).
+    *
+    * Returns one row per batch document:
+    *   (idCol, dup_of_corpus, dup_in_batch, admitted)
+    * and lands the admitted documents' band rows as generation
+    * `batchId`, so the next batch's probe sees this batch's survivors.
+    *
+    * Two atomic renames, in this order:
+    *   1. the verdicts, computed against the index as it stands, commit
+    *      under `verdictDir/batch=<batchId>` (hidden tmp + rename);
+    *   2. the admitted set is read back FROM THAT COMMIT and lands as
+    *      `gen=<batchId>`; the gen dir is the completion marker, and
+    *      after [[graft.sources.Sinks.compactGenerations]] folds it, the
+    *      store's `__committed` manifest is.
+    * Replay matrix for a re-run of the same `batchId`:
+    *   - crash before (1): nothing of the batch is on disk; the replay
+    *     recomputes against the untouched index, bit-identically;
+    *   - crash between (1) and (2): the stored verdict is trusted (never
+    *     re-judged against an index that could already hold the batch's
+    *     own bands) and the append runs once;
+    *   - after (2), folded or not: the stored verdict is returned and
+    *     the append is a pure skip.
+    * The same documents under a NEW batch id are a new batch: admitted
+    * docs now hit their own bands (dup_of_corpus), and nothing is
+    * admitted twice. A doc whose only collision partner was itself
+    * rejected comes back as dup_in_batch, not dup_of_corpus, so
+    * `admitted` is the replay signal (IncrementalDedupSpec pins both).
+    * Single writer per index, like every committed face.
     */
   def committedIncrementalDedupBucketed(batchBands: DataFrame, idCol: String,
                                         indexDir: String, verdictDir: String,
@@ -672,126 +605,14 @@ object MinHashLSH {
     parent.keys.toArray.iterator.map(id => id -> find(id)).toMap
   }
 
-  /** shared verdict materialization: LogicalRDD re-wrap (pins the
-    * pre-append index listing — see incrementalDedup's cache note) +
-    * eager count so the caller can drop the band cache immediately
-    */
-  private def materializeVerdicts(bb: DataFrame, idCol: String,
-                                  idx: DataFrame): DataFrame = {
-    val spark = bb.sparkSession
-    val resPlan = incrementalVerdictPlan(bb, idCol, idx)
-    val res = spark.createDataFrame(resPlan.rdd, resPlan.schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count()
-    res
-  }
-
   /** the admitted docs' band rows (append payload) */
   private def admittedBands(bb: DataFrame, res: DataFrame, idCol: String): DataFrame =
     bb.join(res.where(col("admitted")).select(idCol), Seq(idCol), "left_semi")
 
-  /** CRASH-ATOMIC face of [[incrementalDedup]] for at-least-once
-    * callers (Structured Streaming foreachBatch): the verdict output is
-    * committed idempotently KEYED BY `batchId` BEFORE the admitted-bands
-    * append, so the two writes are effectively atomic under replay.
-    *
-    * The raw incrementalDedup has a crash window: it appends admitted
-    * bands to the index, and only then does the caller's foreachBatch
-    * body write the verdicts. A crash between those writes followed by
-    * Spark's batch replay makes the replayed doc hit its OWN appended
-    * bands → `dup_of_corpus=true` → an admitted doc that is never
-    * recorded as admitted anywhere. Here the protocol is:
-    *
-    *   1. verdict commit — computed against the PRE-append index and
-    *      renamed atomically into `verdictDir/batch=<batchId>/`
-    *      (partition-style layout: reading `verdictDir` yields every
-    *      batch's verdicts plus a `batch` partition column);
-    *   2. index append — the admitted set is re-derived FROM THE
-    *      COMMITTED VERDICT (never recomputed against a possibly-
-    *      post-append index) and lands as ONE deterministically-named
-    *      file `delta_batch_<batchId>.parquet` via tmp + rename, so a
-    *      half-done append is invisible and a redone one is a no-op;
-    *   3. marker — `<indexDir>__commits/batch_<batchId>` records full
-    *      completion; a replay of a marked batch returns the stored
-    *      verdicts without touching anything.
-    *
-    * Crash-window analysis (IncrementalDedupCrashSpec drives each):
-    * before (1) → replay recomputes against the unchanged index,
-    * bit-identical; between (1) and (2) → replay trusts the stored
-    * verdict and performs the append exactly once; between (2) and (3)
-    * → replay sees the delta file and only writes the marker. The
-    * commit markers live in a SIBLING dir so index compaction (which
-    * swaps the index dir wholesale) cannot erase commit history; a
-    * marked batch replayed after compaction is still a pure skip.
-    *
-    * The single-file delta is the micro-batch shape (|batch|·k band
-    * rows); a bulk backfill would instead write deterministically-named
-    * parts under one staged dir and rename the dir. One delta file per
-    * batch is also what [[graft.sources.Sinks.compact]] on the index
-    * dir periodically folds back into ~128 MB parts.
-    */
-  def committedIncrementalDedup(batchBands: DataFrame, idCol: String,
-                                indexDir: String, verdictDir: String,
-                                batchId: Long): DataFrame = {
-    val spark = batchBands.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    def path(s: String) = new org.apache.hadoop.fs.Path(s)
-    val verdictPath = path(s"$verdictDir/batch=$batchId")
-    val marker = path(s"${indexDir}__commits/batch_$batchId")
-    val deltaFile = path(s"$indexDir/delta_batch_$batchId.parquet")
-    def readVerdict(): DataFrame = spark.read.parquet(verdictPath.toString)
-
-    if (fs.exists(marker)) return readVerdict() // fully committed replay
-
-    val bb = batchBands.select(col(idCol), col("band"), col("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (!fs.exists(verdictPath)) {
-        // first attempt (or replay of a crash before the verdict
-        // commit): the index is untouched by this batch, so computing
-        // against the current listing is computing against the
-        // pre-append index — then commit via hidden tmp + atomic rename
-        graft.sources.Sinks.atomicParquetCommit(
-          incrementalVerdictPlan(bb, idCol, spark.read.parquet(indexDir)),
-          path(s"$verdictDir/.tmp_batch_$batchId"), verdictPath)
-      }
-      if (!fs.exists(deltaFile)) {
-        // admitted set comes from the COMMITTED verdict — a replay in
-        // this window must not re-judge against the live index. The
-        // append is additionally made CONTENT-idempotent with an
-        // anti-join against the current index: on the first append it
-        // drops nothing (an admitted doc, by definition, shares no
-        // (band, h) bucket with the index, and its id is new), but a
-        // replay whose delta file was already folded away by a
-        // Sinks.compact run in the append→marker crash window would
-        // otherwise re-append the same rows — the anti-join turns that
-        // re-append into a no-op instead of a duplicate
-        // (IncrementalDedupCrashSpec pins the window).
-        val admitted = readVerdict().where(col("admitted")).select(idCol)
-        val tmpDir = path(s"$indexDir/.tmp_delta_$batchId")
-        fs.delete(tmpDir, true)
-        bb.join(admitted, Seq(idCol), "left_semi")
-          .join(spark.read.parquet(indexDir),
-            Seq(idCol, "band", "h"), "left_anti")
-          .coalesce(1)
-          .write.parquet(tmpDir.toString)
-        val part = fs.listStatus(tmpDir).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(throw new java.io.IOException(s"no part file in $tmpDir"))
-        graft.sources.Sinks.renameOrThrow(fs, part, deltaFile)
-        fs.delete(tmpDir, true)
-      }
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
-      readVerdict()
-    } finally bb.unpersist()
-  }
-
-  /** The LAZY verdict plan behind incrementalDedup — exposed so plan-
-    * shape specs can assert the probe stays a broadcast of the batch
-    * side (the executed gate result is a LogicalRDD wrapper whose plan
-    * string hides the upstream joins).
+  /** The LAZY verdict plan behind [[committedIncrementalDedupBucketed]]
+    * — exposed so plan-shape specs can assert the probe stays a
+    * broadcast of the batch side (the entry returns a read of the
+    * committed verdicts, whose plan hides the upstream joins).
     */
   private[graft] def incrementalVerdictPlan(bb: DataFrame, idCol: String,
                                             idx: DataFrame): DataFrame = {

@@ -73,7 +73,8 @@ object DedupQueries extends QueryPack {
   private val duckBands = s"WITH ${duckBandsChain("documents", "")}"
 
   /** d13/d16 shared verdict restatement (the two gates differ only in
-    * index LAYOUT — flat scan vs hash-bucket-pruned — never in result)
+    * the index's bucket count — one bucket read whole vs 64 pruned —
+    * never in result)
     */
   private val duckIncrementalVerdicts =
     s"""$duckBands,
@@ -92,8 +93,8 @@ object DedupQueries extends QueryPack {
         LEFT JOIN hitc hc ON i.doc_id = hc.doc_id
         LEFT JOIN hitb hb ON i.doc_id = hb.doc_id"""
 
-  /** d15/d19 shared restatement (flat vs generational-bucketed
-    * compaction — layout and folding can never change verdicts):
+  /** d15/d19 shared restatement (the two gates differ only in how the
+    * folded-id replay is driven — folding can never change verdicts):
     * corpus + two sequential admitted batches, then the probe batch
     * judged against the accumulated index, `compacted` asserted true.
     */
@@ -145,6 +146,64 @@ object DedupQueries extends QueryPack {
         FROM (SELECT DISTINCT doc_id FROM pb) i
         LEFT JOIN hcp ON i.doc_id = hcp.doc_id
         LEFT JOIN hbp ON i.doc_id = hbp.doc_id"""
+
+  /** d13/d16: backfill the corpus (doc_id % 5 != 0) into an index of
+    * `numBuckets` hash buckets, then judge the batch (doc_id % 5 == 0)
+    * through the dedup entry
+    */
+  private def incrementalProbe(s: SparkSession, d: String, tag: String,
+                               numBuckets: Int): DataFrame = {
+    val docs = withWords(Tables.documents(s, d))
+    val base = Scratch.dir(s"graft_${tag}_")
+    val idxDir = base.resolve("bands").toString
+    MinHashLSH.buildBucketedIndex(
+      MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0), "doc_id", col("w"), 4),
+      idxDir, numBuckets)
+    MinHashLSH.committedIncrementalDedupBucketed(
+      MinHashLSH.bands(docs.where(col("doc_id") % 5 === 0), "doc_id", col("w"), 4),
+      "doc_id", idxDir, base.resolve("verdicts").toString, 0L)
+  }
+
+  /** d15/d19: backfill → committed batches 0 (doc_id % 10 == 0) and 1
+    * (doc_id % 10 == 5) → compactGenerations → probe of replayed texts
+    * under fresh ids plus novel docs, as a fresh batch 99. `compacted`
+    * holds when the three generations folded into one and
+    * `replaySkipped(batch 0's bands, its stored verdicts, index dir,
+    * verdict dir)`, run after the fold, holds.
+    */
+  private def compactedProbe(s: SparkSession, d: String, tag: String)(
+      replaySkipped: (DataFrame, Set[org.apache.spark.sql.Row], String, String) => Boolean)
+      : DataFrame = {
+    val docs = withWords(Tables.documents(s, d)).select("doc_id", "text", "w")
+    val base = Scratch.dir(s"graft_${tag}_")
+    val idxDir = base.resolve("bands").toString
+    val vDir = base.resolve("verdicts").toString
+    def bandsOf(df: DataFrame) = MinHashLSH.bands(df, "doc_id", col("w"), 4)
+    MinHashLSH.buildBucketedIndex(bandsOf(docs.where(col("doc_id") % 5 =!= 0)), idxDir)
+    val batch0 = bandsOf(docs.where(col("doc_id") % 10 === 0))
+    val stored = MinHashLSH.committedIncrementalDedupBucketed(
+      batch0, "doc_id", idxDir, vDir, 0L).collect().toSet
+    MinHashLSH.committedIncrementalDedupBucketed(
+      bandsOf(docs.where(col("doc_id") % 10 === 5)), "doc_id", idxDir, vDir, 1L)
+    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+    def nGens = fs.listStatus(new org.apache.hadoop.fs.Path(idxDir))
+      .count(_.getPath.getName.startsWith("gen="))
+    val before = nGens // gen=-1 + two batch gens
+    graft.sources.Sinks.compactGenerations(s, idxDir, Some("hb"))
+    val folded = before == 3 && nGens == 1
+    // the replay must land no generation either
+    val compacted = folded && replaySkipped(batch0, stored, idxDir, vDir) && nGens == 1
+    val replayProbe = docs.where(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    val novelProbe = docs.where(col("doc_id") % 11 === 0)
+      .select((col("doc_id") + 2000000L).as("doc_id"),
+        concat_ws(" ", (0 to 7).map(i =>
+          concat(lit("u"), col("doc_id"), lit(s"x$i"))): _*).as("text"))
+    MinHashLSH.committedIncrementalDedupBucketed(
+      bandsOf(withWords(replayProbe.unionByName(novelProbe))),
+      "doc_id", idxDir, vDir, 99L)
+      .withColumn("compacted", lit(compacted))
+  }
 
   def all: Seq[Q] = Seq(
 
@@ -556,169 +615,77 @@ object DedupQueries extends QueryPack {
 
     // ---- INCREMENTAL dedup against a PERSISTED fingerprint index (the
     // shape a 100 TB deployment actually runs): the corpus (doc_id % 5
-    // != 0) is fingerprinted ONCE into a parquet band index; when the
-    // new batch (doc_id % 5 == 0) lands, ONLY the batch is hashed — the
-    // corpus is never re-scanned. The index probe is an equi-join on
-    // (band, h) with the small batch side broadcast (one map-side pass
-    // over the index), within-batch dups use keep-first, and admitted
-    // docs' bands are APPENDED to the index so the next batch sees this
-    // batch's survivors (maintenance cost tracks |batch|, never
-    // |corpus|). Oracle restates both sides' bands and both collision
-    // tests from scratch.
+    // != 0) is fingerprinted ONCE into a band index; when the new batch
+    // (doc_id % 5 == 0) lands, ONLY the batch is hashed — the corpus is
+    // never re-scanned. The probe is an equi-join on (band, h) with the
+    // small batch side broadcast, within-batch dups use keep-first, the
+    // verdicts commit first, and admitted docs' bands land as the
+    // batch's generation so the next batch sees its survivors
+    // (maintenance cost tracks |batch|, never |corpus|). The index has
+    // ONE hash bucket, so the probe reads the whole index: d16 runs the
+    // same entry over 64 buckets, and the two gates share an oracle
+    // because pruning can never change a verdict. Oracle restates both
+    // sides' bands and both collision tests from scratch.
     Q("d13_incremental_index_dedup",
-      (s, d) => {
-        val docs = withWords(Tables.documents(s, d))
-        val corpus = docs.where(col("doc_id") % 5 =!= 0)
-        val batch = docs.where(col("doc_id") % 5 === 0)
-        val idxDir = Scratch.dir("graft_d13_").resolve("bands").toString
-        // one-time backfill (at scale this already exists on disk)
-        MinHashLSH.bands(corpus, "doc_id", col("w"), 4)
-          .write.parquet(idxDir)
-        MinHashLSH.incrementalDedup(
-          MinHashLSH.bands(batch, "doc_id", col("w"), 4), "doc_id", idxDir)
-      },
+      (s, d) => incrementalProbe(s, d, "d13", numBuckets = 1),
       Some(duckIncrementalVerdicts)),
 
-    // ---- BUCKETED band index (d16): the 100 TB serving layout of d13
-    // — the flat index pays a full (map-only) index scan per batch; at
-    // real scale that is |corpus| I/O every batch. Here band rows carry
-    // hb = pmod(xxhash64(h), 64), the index lives under gen=<batch>/
-    // hb=<n>/ partition dirs (exactly-once generational appends), and
-    // the batch probe PRUNES the scan to its own hash buckets — at
-    // most |batch|·k of them — so probe I/O tracks |batch|, never
-    // |corpus|. The bucket count is a recorded layout contract
-    // (probing derives it from the index's marker — a mismatched guess
-    // would silently prune true collisions, so the knob only exists at
-    // build time). hb is a pure function of h (pruned rows cannot
-    // collide), so the verdicts are byte-identical to d13's and the
-    // gate shares its oracle; IncrementalDedupCrashSpec pins
-    // layout-equality and the partition prune on the operator's own
-    // pruned read.
+    // ---- BUCKETED band index (d16): d13 over 64 hash buckets, the
+    // 100 TB serving layout. Band rows carry hb = pmod(xxhash64(h), 64),
+    // the index lives under gen=<batch>/hb=<n>/ partition dirs
+    // (exactly-once generational appends), and the batch probe PRUNES
+    // the scan to its own hash buckets — at most |batch|·k of them — so
+    // probe I/O tracks |batch|, never |corpus|. The bucket count is a
+    // recorded layout contract (probing derives it from the index's
+    // marker — a mismatched guess would silently prune true collisions,
+    // so the knob only exists at build time). hb is a pure function of
+    // h (pruned rows cannot collide), so the verdicts equal d13's and
+    // the gate shares its oracle; IncrementalDedupCrashSpec pins the
+    // partition prune on the operator's own pruned read.
     Q("d16_bucketed_index_dedup",
-      (s, d) => {
-        val docs = withWords(Tables.documents(s, d))
-        val idxDir = Scratch.dir("graft_d16_").resolve("bands").toString
-        MinHashLSH.buildBucketedIndex(
-          MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0),
-            "doc_id", col("w"), 4), idxDir)
-        MinHashLSH.incrementalDedupBucketed(
-          MinHashLSH.bands(docs.where(col("doc_id") % 5 === 0),
-            "doc_id", col("w"), 4),
-          "doc_id", idxDir, batchId = 0L)
-      },
+      (s, d) => incrementalProbe(s, d, "d16", numBuckets = 64),
       Some(duckIncrementalVerdicts)),
 
-    // ---- Band-index COMPACTION round-trip (the x36 discipline for the
-    // d13/e18 persisted index): every committed micro-batch appends one
-    // delta file, so at streaming cadence the index accumulates
-    // thousands of small files — a listing-time kill at 100 TB. The
-    // gate drives the full lifecycle: backfill → two committed batches
-    // (each landing a delta) → Sinks.compact (atomic rename-swap, same
-    // crash discipline as x36) → a PROBE batch judged against the
+    // ---- Band-index COMPACTION round-trip (d15): every committed
+    // micro-batch lands one gen=<batchId> dir (up to 64 hb dirs), so at
+    // streaming cadence the index accumulates thousands of small files
+    // — a listing-time kill at 100 TB. The gate drives the full
+    // lifecycle: backfill → two committed batches →
+    // Sinks.compactGenerations → a PROBE batch judged against the
     // compacted index. The probe mixes replayed texts under fresh ids
     // (must hit the corpus/admitted fingerprints — any compaction loss
     // flips them to admitted) with genuinely novel docs (must be
-    // admitted — any compaction duplication cannot create collisions,
-    // but a corrupted swap would); the `compacted` column carries the
-    // file-count assertion (strictly fewer index files after). Commit
-    // markers live in a sibling dir, so batch replay after compaction
-    // stays a pure skip (IncrementalDedupCrashSpec pins that).
+    // admitted — a corrupted swap would not be). The gen dir is the
+    // replay marker, and folding it away moves that duty to the
+    // sibling __committed manifest, so the `compacted` column asserts
+    // the generation count collapsed AND that replaying batch 0 through
+    // the dedup entry after the fold returns its stored verdicts and
+    // appends nothing.
     Q("d15_index_compaction",
-      (s, d) => {
-        import graft.operators.MinHashLSH
-        val docs = withWords(Tables.documents(s, d)).select("doc_id", "text", "w")
-        val base = Scratch.dir("graft_d15_")
-        val idxDir = base.resolve("bands").toString
-        val vDir = base.resolve("verdicts").toString
-        MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0),
-          "doc_id", col("w"), 4).write.parquet(idxDir)
-        MinHashLSH.committedIncrementalDedup(
-          MinHashLSH.bands(docs.where(col("doc_id") % 10 === 0),
-            "doc_id", col("w"), 4), "doc_id", idxDir, vDir, 0L)
-        MinHashLSH.committedIncrementalDedup(
-          MinHashLSH.bands(docs.where(col("doc_id") % 10 === 5),
-            "doc_id", col("w"), 4), "doc_id", idxDir, vDir, 1L)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        def nFiles = fs.listStatus(new org.apache.hadoop.fs.Path(idxDir))
-          .count(_.getPath.getName.endsWith(".parquet"))
-        val before = nFiles
-        graft.sources.Sinks.compact(s, idxDir)
-        val after = nFiles
-        val replayProbe = docs.where(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        val novelProbe = docs.where(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat_ws(" ", (0 to 7).map(i =>
-              concat(lit("u"), col("doc_id"), lit(s"x$i"))): _*).as("text"))
-        val probe = withWords(replayProbe.unionByName(novelProbe))
-        MinHashLSH.incrementalDedup(
-          MinHashLSH.bands(probe, "doc_id", col("w"), 4),
-          "doc_id", idxDir, appendAdmitted = false)
-          .withColumn("compacted", lit(after < before))
+      (s, d) => compactedProbe(s, d, "d15") { (batch0, stored, idxDir, vDir) =>
+        val rowsBefore = s.read.parquet(idxDir).count()
+        val replay = MinHashLSH.committedIncrementalDedupBucketed(
+          batch0, "doc_id", idxDir, vDir, 0L).collect().toSet
+        replay == stored && s.read.parquet(idxDir).count() == rowsBefore
       },
       Some(duckCompactionOracle)),
 
-    // ---- Generational compaction for the BUCKETED layout (d19): d15
-    // compacts the flat index, but the bucketed stores (d16's index,
-    // s16's IVF cells, d18's band store) accumulate one gen=<batchId>
-    // dir per micro-batch — and there the gen dir IS the replay
-    // marker, so folding it away naively would let a replayed batch
-    // re-ingest. `Sinks.compactGenerations` records the folded ids in
-    // the sibling __committed manifest BEFORE the swap (every manifest
-    // id is already committed, so a crash after the manifest write
+    // ---- Generational compaction, the marker tier underneath (d19):
+    // d15's dataflow, with the folded-id replay driven through the raw
+    // `Sinks.committedPartitionedAppend` the entry appends with — the
+    // store the same tier serves for s16's IVF cells and d18's band
+    // store. `Sinks.compactGenerations` records the folded ids in the
+    // sibling __committed manifest BEFORE the swap (every manifest id
+    // is already committed, so a crash after the manifest write
     // over-skips nothing; the reverse order would double-ingest), then
-    // folds all generations into one gen=-1 preserving the hb
-    // partition layout (one file per bucket) with compact's
-    // rename-aside recovery. The gate drives d15's exact dataflow
-    // through the bucketed faces — backfill → two committed batches →
-    // compactGenerations → probe — and its `compacted` column also
-    // asserts the gen count collapsed to 1 AND that a driven replay of
-    // a FOLDED batchId is a pure skip through the manifest tier (the
-    // layout marker rides through as a sibling). Shared oracle with
-    // d15: compaction and layout can never change verdicts.
+    // folds all generations into one gen=-1 preserving the hb partition
+    // layout (one file per bucket) with compact's rename-aside
+    // recovery; a re-append of a FOLDED batch id must report a skip.
+    // Shared oracle with d15: folding can never change verdicts.
     Q("d19_bucketed_compaction",
-      (s, d) => {
-        import graft.operators.MinHashLSH
-        val docs = withWords(Tables.documents(s, d)).select("doc_id", "text", "w")
-        val idxDir = Scratch.dir("graft_d19_").resolve("bands").toString
-        MinHashLSH.buildBucketedIndex(
-          MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0),
-            "doc_id", col("w"), 4), idxDir)
-        MinHashLSH.incrementalDedupBucketed(
-          MinHashLSH.bands(docs.where(col("doc_id") % 10 === 0),
-            "doc_id", col("w"), 4), "doc_id", idxDir, batchId = 0L)
-        MinHashLSH.incrementalDedupBucketed(
-          MinHashLSH.bands(docs.where(col("doc_id") % 10 === 5),
-            "doc_id", col("w"), 4), "doc_id", idxDir, batchId = 1L)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        def nGens = fs.listStatus(new org.apache.hadoop.fs.Path(idxDir))
-          .count(_.getPath.getName.startsWith("gen="))
-        val before = nGens // gen=-1 + two batch gens
-        graft.sources.Sinks.compactGenerations(s, idxDir, Some("hb"))
-        val after = nGens
-        // replay of a FOLDED batch id: only the manifest tier can skip
-        // it now (its gen dir is gone) — a re-append would double the
-        // admitted bands and flip the replayed-text probes
-        val replayed = graft.sources.Sinks.committedPartitionedAppend(
-          MinHashLSH.withHashBucket(
-            MinHashLSH.bands(docs.where(col("doc_id") % 10 === 0),
-              "doc_id", col("w"), 4)
-              .select(col("doc_id"), col("band"), col("h"))),
-          idxDir, 0L, "hb")
-        val replayProbe = docs.where(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        val novelProbe = docs.where(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat_ws(" ", (0 to 7).map(i =>
-              concat(lit("u"), col("doc_id"), lit(s"x$i"))): _*).as("text"))
-        MinHashLSH.incrementalDedupBucketed(
-          MinHashLSH.bands(withWords(replayProbe.unionByName(novelProbe)),
-            "doc_id", col("w"), 4),
-          "doc_id", idxDir, batchId = 99L, appendAdmitted = false)
-          .withColumn("compacted",
-            lit(before == 3 && after == 1 && !replayed))
+      (s, d) => compactedProbe(s, d, "d19") { (batch0, _, idxDir, _) =>
+        !graft.sources.Sinks.committedPartitionedAppend(
+          MinHashLSH.withHashBucket(batch0), idxDir, 0L, "hb")
       },
       Some(duckCompactionOracle)),
 
@@ -1050,9 +1017,9 @@ object DedupQueries extends QueryPack {
           df => df.where(col("doc_id") % 3 =!= 0))
         val probe = docs.where(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        MinHashLSH.incrementalDedupBucketed(
+        MinHashLSH.committedIncrementalDedupBucketed(
           MinHashLSH.bands(withWords(probe), "doc_id", col("w"), 4),
-          "doc_id", idxDir, batchId = 0L, appendAdmitted = false)
+          "doc_id", idxDir, Scratch.dir("graft_d22_v_").toString, 0L)
       },
       Some(s"""$duckBands,
               corpus AS (SELECT * FROM bands

@@ -536,14 +536,15 @@ object EventQueries extends QueryPack {
     // ---- Streaming dedup against the PERSISTED index (e18): the
     // DURABLE sibling of e13 — e13's dropDuplicates state lives in the
     // state store and dies with the checkpoint; here every micro-batch
-    // runs the CRASH-ATOMIC face of d13's incremental dedup
-    // (MinHashLSH.committedIncrementalDedup) against the on-disk band
-    // index, keyed by foreachBatch's REAL batchId: verdicts commit
-    // atomically under batch=<id> BEFORE the admitted bands append, so
-    // a crash between the two writes followed by Spark's batch replay
-    // can neither lose an admitted doc nor double-ingest it
-    // (IncrementalDedupCrashSpec drives each window). The dedup memory
-    // survives restarts and is shared with the batch pipeline.
+    // runs d13's incremental dedup entry
+    // (MinHashLSH.committedIncrementalDedupBucketed) against the
+    // on-disk band index, keyed by foreachBatch's REAL batchId:
+    // verdicts commit atomically under batch=<id> BEFORE the admitted
+    // bands land as the batch's generation, so a crash between the two
+    // writes followed by Spark's batch replay can neither lose an
+    // admitted doc nor double-ingest it (IncrementalDedupCrashSpec
+    // drives the window). The dedup memory survives restarts and is
+    // shared with the batch pipeline.
     // Two landings are driven explicitly: batch 0 is fresh docs, batch
     // 1 adds new docs PLUS A FULL REPLAY of landing 1's DATA
     // (at-least-once delivery upstream of the stream) — no redelivered
@@ -552,8 +553,7 @@ object EventQueries extends QueryPack {
     // sequential batches, including the index state between them.
     Q("e18_stream_index_dedup",
       (s, d) => {
-        import graft.operators.MinHashLSH
-        val (docs, fileA, idxDir, stage) = indexDedupFixture(s, d, "e18")
+        val (docs, fileA, idxDir, stage) = indexDedupFixture(s, d, "e18", numBuckets = 1)
         val stream = s.readStream.schema("doc_id LONG, text STRING").parquet(stage)
         val resultDir = runGatedStreamWith(s, stream,
           indexDedupBody(idxDir)) { q =>
@@ -581,7 +581,7 @@ object EventQueries extends QueryPack {
     // within a batch are IncrementalDedupCrashSpec's territory.)
     Q("e19_stream_restart_dedup",
       (s, d) => {
-        val (docs, fileA, idxDir, stage) = indexDedupFixture(s, d, "e19")
+        val (docs, fileA, idxDir, stage) = indexDedupFixture(s, d, "e19", numBuckets = 1)
         val ckpt = Scratch.dir("graft_e19_ck_").toString
         val outDir = Scratch.dir("graft_e19_out_").toString
         def stream() = s.readStream.schema("doc_id LONG, text STRING").parquet(stage)
@@ -1282,35 +1282,17 @@ object EventQueries extends QueryPack {
               ORDER BY ticket LIMIT 100""")),
 
     // ---- Streaming dedup against the BUCKETED index (e20): e18's
-    // protocol on d16's partition-pruned layout — every micro-batch
-    // probes ONLY its own hash buckets (probe I/O tracks |batch|,
-    // never |corpus|) through the committed bucketed face: verdicts
-    // commit under batch=<id> first, admitted bands land as the
-    // batch's generation, and the gen dir doubles as the completion
-    // marker (no delta file, no sibling marker — two atomic renames).
-    // Same landings, same redelivery, same oracle as e18/e19: layout
-    // can never change verdicts.
+    // stream over d16's 64-bucket layout, where e18/e19 use d13's one
+    // bucket — every micro-batch probes ONLY its own hash buckets
+    // (probe I/O tracks |batch|, never |corpus|). Same landings, same
+    // redelivery, same oracle as e18/e19: layout can never change
+    // verdicts.
     Q("e20_stream_bucketed_dedup",
       (s, d) => {
-        import graft.operators.MinHashLSH
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        val idxDir = Scratch.dir("graft_e20_idx_").resolve("bands").toString
-        MinHashLSH.buildBucketedIndex(
-          MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0)
-              .withColumn("w", split(col("text"), " ")),
-            "doc_id", col("w"), 4), idxDir)
-        val stage = Scratch.dir("graft_e20_stage_").toString
-        val fileA = docs.where(col("doc_id") % 10 === 0)
-        fileA.coalesce(1).write.mode("append").parquet(stage)
+        val (docs, fileA, idxDir, stage) = indexDedupFixture(s, d, "e20", numBuckets = 64)
         val stream = s.readStream.schema("doc_id LONG, text STRING").parquet(stage)
         val resultDir = runGatedStreamWith(s, stream,
-          (batch, oDir, bid) => if (!batch.isEmpty) {
-            MinHashLSH.committedIncrementalDedupBucketed(
-              MinHashLSH.bands(batch.withColumn("w", split(col("text"), " ")),
-                "doc_id", col("w"), 4),
-              "doc_id", idxDir, oDir, bid)
-            ()
-          }) { q =>
+          indexDedupBody(idxDir)) { q =>
           q.processAllAvailable()
           docs.where(col("doc_id") % 10 === 5).unionByName(fileA)
             .coalesce(1).write.mode("append").parquet(stage)
@@ -1524,30 +1506,34 @@ object EventQueries extends QueryPack {
               SELECT doc_id, min(r) AS keep_id FROM reach GROUP BY doc_id""")),
   ) ++ lateGates
 
-  /** shared e18/e19 fixture: corpus band index + staged landing 1 */
+  /** shared e18/e19/e20 fixture: corpus band index of `numBuckets`
+    * hash buckets + staged landing 1
+    */
   private def indexDedupFixture(s: org.apache.spark.sql.SparkSession, d: String,
-                                tag: String)
+                                tag: String, numBuckets: Int)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, String, String) = {
     import graft.operators.MinHashLSH
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val idxDir = Scratch.dir(s"graft_${tag}_idx_").resolve("bands").toString
-    MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0)
-        .withColumn("w", split(col("text"), " ")),
-      "doc_id", col("w"), 4).write.parquet(idxDir)
+    MinHashLSH.buildBucketedIndex(
+      MinHashLSH.bands(docs.where(col("doc_id") % 5 =!= 0)
+          .withColumn("w", split(col("text"), " ")),
+        "doc_id", col("w"), 4),
+      idxDir, numBuckets)
     val stage = Scratch.dir(s"graft_${tag}_stage_").toString
     val fileA = docs.where(col("doc_id") % 10 === 0)
     fileA.coalesce(1).write.mode("append").parquet(stage)
     (docs, fileA, idxDir, stage)
   }
 
-  /** shared e18/e19 foreachBatch body: the crash-atomic committed
-    * protocol keyed by the real batchId
+  /** shared e18/e19/e20 foreachBatch body: the dedup entry keyed by the
+    * real batchId, its verdicts committed into the stream's output dir
     */
   private def indexDedupBody(idxDir: String)
       : (org.apache.spark.sql.DataFrame, String, Long) => Unit =
     (batch, oDir, bid) => if (!batch.isEmpty) {
       import graft.operators.MinHashLSH
-      MinHashLSH.committedIncrementalDedup(
+      MinHashLSH.committedIncrementalDedupBucketed(
         MinHashLSH.bands(batch.withColumn("w", split(col("text"), " ")),
           "doc_id", col("w"), 4),
         "doc_id", idxDir, oDir, bid)

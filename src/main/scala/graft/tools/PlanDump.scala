@@ -36,13 +36,13 @@ object PlanDump {
       "s30_stream_ivf_bucketed")
       .map(_ -> "streaming face: plans are per-micro-batch; checks in specs")
     val lifecycle = Seq(
-      "d15_index_compaction" -> "compaction lifecycle; probe shape shared with d13's dumped plan",
-      "d16_bucketed_index_dedup" -> "store-build lifecycle; probe shape shared with d13's dumped plan",
+      "d15_index_compaction" -> "compaction lifecycle; probe shape pinned in IncrementalDedupSpec",
+      "d16_bucketed_index_dedup" -> "store-build lifecycle; probe shape pinned in IncrementalDedupSpec",
       "d17_incremental_keeplist" -> "fixpoint lifecycle; loop plans pinned in MinHashLSHSpec",
       "d18_keeplist_lifecycle" -> "store lifecycle; fold/read shapes pinned in KeepListStoreSpec",
       "d19_bucketed_compaction" -> "compaction lifecycle; folded-read shape shared with d31's dumped plan",
       "d21_keeplist_delete" -> "store lifecycle; read shape shared with d31's dumped plan",
-      "d22_index_delete" -> "store lifecycle; probe shape shared with d13's dumped plan",
+      "d22_index_delete" -> "store lifecycle; probe shape pinned in IncrementalDedupSpec",
       "d23_keeplist_asof" -> "store lifecycle; as-of prune shape shared with t32's dumped plan",
       "d29_keeplist_burst_fold" -> "fold-burst lifecycle; read shape shared with d31's dumped plan",
       "s17_ivf_delete" -> "store lifecycle; pruned-serve shape shared with s13's dumped plan")
@@ -105,8 +105,11 @@ object PlanDump {
       // (block equi-join before levenshtein, bounded per-query window)
       "a19_cms_heavy_hitters", "a20_pivot_lang_counts",
       "r11_pagerank_lite", "e16_funnel", "t23_fuzzy_citation",
-      // round-7 continued: d13 incremental dedup (the persisted index
-      // scan is probed by a BROADCAST batch side — no corpus shuffle),
+      // round-7 continued: d13 incremental dedup (the gate returns its
+      // committed verdicts, so the dump is their read; the probe's
+      // broadcast of the batch side over the index scan — no corpus
+      // shuffle — is pinned on incrementalVerdictPlan in
+      // IncrementalDedupSpec),
       // s13 persisted-IVF serve (the index scan must carry
       // PartitionFilters on cell — only probed directories read), t24
       // budget selection (every Window keyed on __pid — the prefix sum
@@ -124,8 +127,8 @@ object PlanDump {
       // rows; IVF side a broadcast cell equi-join — no corpus×corpus
       // pair ever forms). d15/e18/k17/x39 are side-effecting lifecycle
       // gates (write/compact/replay); their plan-level checks live in
-      // IncrementalDedupCrashSpec / Scd2HorizonSpec / the d13 plan
-      // above (the probe shape is shared).
+      // IncrementalDedupSpec / IncrementalDedupCrashSpec /
+      // Scd2HorizonSpec (d15 and e18 run d13's dedup entry).
       "m14_image_keeplist", "s15_ivf_staleness",
       // round-8 retrieval/layout additions: t26 BM25 (query terms +
       // corpus stats broadcast, tf/df partial-agg, top-20 is

@@ -4,14 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Crash-atomicity of MinHashLSH.committedIncrementalDedup (the e18
-  * sink protocol): simulate dying in each window between the verdict
-  * commit, the index append, and the marker, then replay — an admitted
-  * doc must never be lost (verdict flipped to dup_of_corpus by its own
-  * appended bands) and never double-ingested (duplicate bands in the
-  * index). SinksCrashSpec discipline: each window's on-disk state is
-  * constructed exactly, then the real entry point is re-invoked as a
-  * restarted stream would.
+/** Crash-atomicity of MinHashLSH.committedIncrementalDedupBucketed
+  * (the e18 sink protocol): simulate dying between the verdict commit
+  * and the generational append, then replay — an admitted doc must
+  * never be lost (verdict flipped to dup_of_corpus by its own appended
+  * bands) and never double-ingested (duplicate bands in the index),
+  * before or after the store's generations are folded. SinksCrashSpec
+  * discipline: each window's on-disk state is constructed exactly, then
+  * the real entry point is re-invoked as a restarted stream would.
   */
 class IncrementalDedupCrashSpec extends SparkSpec {
 
@@ -52,84 +52,64 @@ class IncrementalDedupCrashSpec extends SparkSpec {
   private def freshDirs(): (String, String) = {
     val base = java.nio.file.Files.createTempDirectory("inc_crash_")
     val idx = base.resolve("idx").toString
-    corpusBands.write.parquet(idx)
+    MinHashLSH.buildBucketedIndex(corpusBands, idx)
     (idx, base.resolve("verdicts").toString)
   }
 
+  private def dedup(batch: DataFrame, idx: String, vd: String, batchId: Long) =
+    verdictMap(MinHashLSH.committedIncrementalDedupBucketed(
+      batch, "doc_id", idx, vd, batchId))
+
+  /** the index's band rows with the layout columns (gen, hb) dropped */
   private def indexBands(idx: String): Seq[(Long, Int, String)] =
     spark.read.parquet(idx).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band"), r.getAs[String]("h")))
       .toSeq.sorted
 
+  private def gens(idx: String): Set[String] =
+    fs.listStatus(p(idx)).map(_.getPath.getName).filter(_.startsWith("gen=")).toSet
+
   private val appendedIndex =
     ((1L to 6L).map(i => (i, 0, s"c$i")) ++
       Seq((7L, 0, "c70"), (9L, 0, "c90"))).sorted
 
-  test("happy path: verdict committed, delta appended once, marker written; full replay is a pure skip") {
-    val (idx, vd) = freshDirs()
-    val v1 = MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
-    assert(verdictMap(v1) == expected)
-    assert(indexBands(idx) == appendedIndex, "admitted bands (7, 9) appended exactly once")
-    assert(fs.exists(p(s"${idx}__commits/batch_0")))
-    val filesBefore = fs.listStatus(p(idx)).length
-
-    // full replay (restart after everything committed): verdicts stable,
-    // index untouched — no re-judging against the appended bands
-    val v2 = MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
-    assert(verdictMap(v2) == expected, "replay must return the stored verdicts unchanged")
-    assert(indexBands(idx) == appendedIndex, "replay must not double-append")
-    assert(fs.listStatus(p(idx)).length == filesBefore)
-  }
-
   test("crash BETWEEN verdict commit and index append: replay keeps the admitted verdict and appends exactly once") {
     val (idx, vd) = freshDirs()
     // reproduce the window: verdicts computed against the pre-append
-    // index and committed under batch=0; the process dies before any
-    // band append (no delta file, no marker)
-    MinHashLSH.incrementalDedup(batchBands, "doc_id", idx, appendAdmitted = false)
-      .write.parquet(s"$vd/batch=0")
+    // index and committed under batch=0; the process dies before the
+    // generational append. The commit is the entry's own, taken from a
+    // twin index of the same corpus.
+    val (twinIdx, twinVd) = freshDirs()
+    dedup(batchBands, twinIdx, twinVd, 0L)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(s"$twinVd/batch=0"),
+      fs, p(s"$vd/batch=0"), false, spark.sparkContext.hadoopConfiguration))
+    val committed = fs.listStatus(p(s"$vd/batch=0")).map(_.getPath.getName).toSet
     assert(indexBands(idx) == (1L to 6L).map(i => (i, 0, s"c$i")).sorted)
 
-    val v = MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
     // the decisive assertion: docs 7/9 were admitted pre-crash; the
     // replay must NOT flip them to dup_of_corpus via their own bands
-    assert(verdictMap(v) == expected,
+    assert(dedup(batchBands, idx, vd, 0L) == expected,
       "replay after the verdict-commit window must trust the stored verdict")
+    assert(fs.listStatus(p(s"$vd/batch=0")).map(_.getPath.getName).toSet == committed,
+      "the stored verdict is read, never rewritten")
     assert(indexBands(idx) == appendedIndex, "append happens exactly once")
-    assert(fs.exists(p(s"${idx}__commits/batch_0")))
-  }
+    assert(gens(idx) == Set("gen=-1", "gen=0"), "admitted bands (7, 9) landed as gen=0")
 
-  test("crash BETWEEN index append and marker: replay does not double-append") {
-    val (idx, vd) = freshDirs()
-    MinHashLSH.incrementalDedup(batchBands, "doc_id", idx, appendAdmitted = false)
-      .write.parquet(s"$vd/batch=0")
-    // the delta landed (single deterministic file) but the marker never
-    // got written
-    import spark.implicits._
-    val tmpDelta = s"$idx/.tmp_crash"
-    Seq(bandRow(7L, 70L), bandRow(9L, 90L)).toDF("doc_id", "band", "h")
-      .coalesce(1).write.parquet(tmpDelta)
-    val part = fs.listStatus(p(tmpDelta)).map(_.getPath)
-      .find(_.getName.startsWith("part-")).get
-    assert(fs.rename(part, p(s"$idx/delta_batch_0.parquet")))
-    fs.delete(p(tmpDelta), true)
-
-    val v = MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
-    assert(verdictMap(v) == expected)
-    assert(indexBands(idx) == appendedIndex,
-      "replay in the append→marker window must not duplicate the delta")
-    assert(fs.exists(p(s"${idx}__commits/batch_0")))
+    // full replay (restart after everything committed): verdicts
+    // stable, index untouched — no re-judging against the appended bands
+    assert(dedup(batchBands, idx, vd, 0L) == expected,
+      "replay must return the stored verdicts unchanged")
+    assert(indexBands(idx) == appendedIndex, "replay must not double-append")
   }
 
   test("sequential batches chain through the committed index; a later batch sees earlier admits") {
     import spark.implicits._
     val (idx, vd) = freshDirs()
-    MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
+    dedup(batchBands, idx, vd, 0L)
     // batch 1: doc 11 collides with batch 0's ADMITTED doc 7 → must be
     // dup_of_corpus now; doc 12 fresh
     val b1 = Seq(bandRow(11L, 70L), bandRow(12L, 120L)).toDF("doc_id", "band", "h")
-    val v1 = MinHashLSH.committedIncrementalDedup(b1, "doc_id", idx, vd, 1L)
-    assert(verdictMap(v1) == Map(
+    assert(dedup(b1, idx, vd, 1L) == Map(
       11L -> ((true, false, false)), 12L -> ((false, false, true))))
     // reading the verdict ROOT yields both batches with the partition col
     val all = spark.read.parquet(vd)
@@ -137,80 +117,38 @@ class IncrementalDedupCrashSpec extends SparkSpec {
     assert(all.count() == 6)
   }
 
-  test("compaction folds deltas without changing verdicts; markers survive the swap") {
+  test("compaction keeps verdicts; replay after the fold is a pure skip") {
     import spark.implicits._
     val (idx, vd) = freshDirs()
-    MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
+    dedup(batchBands, idx, vd, 0L)
     val b1 = Seq(bandRow(11L, 70L), bandRow(12L, 120L)).toDF("doc_id", "band", "h")
-    MinHashLSH.committedIncrementalDedup(b1, "doc_id", idx, vd, 1L)
-    def parquetFiles = fs.listStatus(p(idx))
-      .count(_.getPath.getName.endsWith(".parquet"))
-    val before = parquetFiles
-    assert(before >= 3, "backfill + two deltas expected before compaction")
+    val v1 = dedup(b1, idx, vd, 1L)
+    assert(gens(idx) == Set("gen=-1", "gen=0", "gen=1"))
     val contentBefore = indexBands(idx)
-    // probe verdicts against the uncompacted index (no append)
-    val probe = Seq(bandRow(21L, 70L), bandRow(22L, 999L)).toDF("doc_id", "band", "h")
-    val vBefore = verdictMap(
-      MinHashLSH.incrementalDedup(probe, "doc_id", idx, appendAdmitted = false))
 
-    graft.sources.Sinks.compact(spark, idx)
-    assert(parquetFiles < before, "compaction must strictly reduce the file count")
+    graft.sources.Sinks.compactGenerations(spark, idx, Some("hb"))
+    assert(gens(idx) == Set("gen=-1"), "every generation folds into gen=-1")
     assert(indexBands(idx) == contentBefore, "compaction must preserve every band row")
-    val vAfter = verdictMap(
-      MinHashLSH.incrementalDedup(probe, "doc_id", idx, appendAdmitted = false))
-    assert(vAfter == vBefore, "verdicts against the compacted index must be identical")
 
-    // commit markers live in a SIBLING dir — the dir swap cannot erase
-    // them, so a replayed batch after compaction is still a pure skip
-    assert(fs.exists(p(s"${idx}__commits/batch_0")))
-    val replay = verdictMap(
-      MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L))
-    assert(replay == expected)
+    // the folded gen dirs were the replay markers; the __committed
+    // manifest now is, so replaying either folded batch id returns its
+    // stored verdicts and appends nothing
+    assert(dedup(batchBands, idx, vd, 0L) == expected)
+    assert(dedup(b1, idx, vd, 1L) == v1)
     assert(indexBands(idx) == contentBefore, "post-compaction replay must not re-append")
+    assert(gens(idx) == Set("gen=-1"))
+
+    // a new batch is judged against the folded index: 21 hits batch
+    // 0's admitted 7, 22 is fresh
+    val probe = Seq(bandRow(21L, 70L), bandRow(22L, 999L)).toDF("doc_id", "band", "h")
+    assert(dedup(probe, idx, vd, 2L) == Map(
+      21L -> ((true, false, false)), 22L -> ((false, false, true))))
   }
 
-  test("append→marker crash window + compaction folding the delta: replay still appends exactly once") {
-    val (idx, vd) = freshDirs()
-    // reproduce the WORST ordering: verdict committed, delta file
-    // landed, marker never written — then a maintenance compact runs
-    // BEFORE the stream restarts, folding the delta into anonymous
-    // parts (so the replay can't see the delta by name)
-    MinHashLSH.incrementalDedup(batchBands, "doc_id", idx, appendAdmitted = false)
-      .write.parquet(s"$vd/batch=0")
-    import spark.implicits._
-    val tmpDelta = s"$idx/.tmp_crash"
-    Seq(bandRow(7L, 70L), bandRow(9L, 90L)).toDF("doc_id", "band", "h")
-      .coalesce(1).write.parquet(tmpDelta)
-    val part = fs.listStatus(p(tmpDelta)).map(_.getPath)
-      .find(_.getName.startsWith("part-")).get
-    assert(fs.rename(part, p(s"$idx/delta_batch_0.parquet")))
-    fs.delete(p(tmpDelta), true)
-    graft.sources.Sinks.compact(spark, idx)
-    assert(!fs.exists(p(s"$idx/delta_batch_0.parquet")), "compact folded the delta")
-
-    val v = MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idx, vd, 0L)
-    assert(verdictMap(v) == expected)
-    // the anti-join makes the re-append a content no-op: total ROW
-    // count unchanged (a set compare would hide duplicates)
-    assert(spark.read.parquet(idx).count() == appendedIndex.length,
-      "replay after compaction folded the delta must not duplicate band rows")
-    assert(indexBands(idx) == appendedIndex)
-    assert(fs.exists(p(s"${idx}__commits/batch_0")))
-  }
-
-  test("bucketed index (d16): verdicts equal the flat layout, probe partition-prunes to the batch's hash buckets") {
+  test("bucketed index (d16): verdicts equal the expected set, probe partition-prunes to the batch's hash buckets") {
     import org.apache.spark.sql.functions.input_file_name
-    val base = java.nio.file.Files.createTempDirectory("inc_hb_")
-    val flat = base.resolve("flat").toString
-    val bucketed = base.resolve("hb").toString
-    corpusBands.write.parquet(flat)
-    MinHashLSH.buildBucketedIndex(corpusBands, bucketed)
-
-    val vFlat = verdictMap(MinHashLSH.incrementalDedup(
-      batchBands, "doc_id", flat, appendAdmitted = false))
-    val vBucketed = verdictMap(MinHashLSH.incrementalDedupBucketed(
-      batchBands, "doc_id", bucketed, batchId = 0L, appendAdmitted = false))
-    assert(vBucketed == vFlat && vBucketed == expected,
+    val (bucketed, vd) = freshDirs()
+    assert(dedup(batchBands, bucketed, vd, 0L) == expected,
       "layout must never change verdicts")
 
     // the probe's index scan — THE read the operator itself runs
@@ -236,47 +174,21 @@ class IncrementalDedupCrashSpec extends SparkSpec {
     assert((allHb -- probedHb).nonEmpty, "fixture must have unprobed buckets")
 
     // generational append under the bucketed layout: admitted bands
-    // land as gen=0 and a second probe of the same batch sees them
-    val v2 = MinHashLSH.incrementalDedupBucketed(
-      batchBands, "doc_id", bucketed, batchId = 0L, appendAdmitted = true)
-    assert(verdictMap(v2) == expected)
-    val v3 = verdictMap(MinHashLSH.incrementalDedupBucketed(
-      batchBands, "doc_id", bucketed, batchId = 99L, appendAdmitted = false))
+    // landed as gen=0 and a probe of the same docs under a new id
+    // sees them
+    val v3 = dedup(batchBands, bucketed, vd, 99L)
     assert(v3.values.forall(v => !v._3), "replayed batch docs all hit the appended bands")
   }
 
   test("bucketed index: probing without the layout marker fails loudly, never prunes wrong") {
-    val dir = java.nio.file.Files.createTempDirectory("inc_nohb_")
-      .resolve("hb").toString
+    val base = java.nio.file.Files.createTempDirectory("inc_nohb_")
+    val dir = base.resolve("hb").toString
     // an index laid down WITHOUT buildBucketedIndex (no layout marker)
     graft.sources.Sinks.committedPartitionedAppend(
       MinHashLSH.withHashBucket(corpusBands, 32), dir, -1L, "hb")
     val e = intercept[IllegalStateException](
-      MinHashLSH.incrementalDedupBucketed(batchBands, "doc_id", dir, 0L))
+      dedup(batchBands, dir, base.resolve("verdicts").toString, 0L))
     assert(e.getMessage.contains("layout marker"))
-  }
-
-  test("committed bucketed face: crash between verdict commit and gen append heals like the flat protocol") {
-    val base = java.nio.file.Files.createTempDirectory("inc_hbc_")
-    val idx = base.resolve("hb").toString
-    val vd = base.resolve("verdicts").toString
-    MinHashLSH.buildBucketedIndex(corpusBands, idx)
-    // window: verdicts committed (computed pre-append), process died
-    // before the generational append
-    MinHashLSH.incrementalDedupBucketed(batchBands, "doc_id", idx,
-      batchId = 0L, appendAdmitted = false).write.parquet(s"$vd/batch=0")
-
-    val v = MinHashLSH.committedIncrementalDedupBucketed(
-      batchBands, "doc_id", idx, vd, 0L)
-    assert(verdictMap(v) == expected,
-      "replay must trust the stored verdict, not re-judge")
-    val gen0 = spark.read.parquet(idx).where(col("gen") === 0)
-    assert(gen0.count() == 2, "admitted bands (7, 9) landed as gen=0")
-    // full replay: pure skip, nothing double-appends
-    val v2 = MinHashLSH.committedIncrementalDedupBucketed(
-      batchBands, "doc_id", idx, vd, 0L)
-    assert(verdictMap(v2) == expected)
-    assert(spark.read.parquet(idx).where(col("gen") === 0).count() == 2)
   }
 
   test("committedPartitionedAppend reports id reuse and sweeps stale tmp dirs") {
@@ -292,15 +204,5 @@ class IncrementalDedupCrashSpec extends SparkSpec {
     assert(graft.sources.Sinks.committedPartitionedAppend(gen(20 until 22), dir, 1L, "part"))
     assert(!fs.exists(p(s"$dir/.tmp_gen_7")), "stale tmp must be swept")
     assert(spark.read.parquet(dir).count() == 6)
-  }
-
-  test("committed verdicts equal the raw incrementalDedup verdicts (same batch, same index)") {
-    val (idxA, vdA) = freshDirs()
-    val (idxB, _) = freshDirs()
-    val committed = verdictMap(
-      MinHashLSH.committedIncrementalDedup(batchBands, "doc_id", idxA, vdA, 5L))
-    val raw = verdictMap(
-      MinHashLSH.incrementalDedup(batchBands, "doc_id", idxB, appendAdmitted = false))
-    assert(committed == raw)
   }
 }

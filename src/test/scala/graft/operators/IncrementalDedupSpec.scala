@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** MinHashLSH.incrementalDedup — the persisted-index batch dedup (gate
-  * d13). Driven with explicit band frames so the collision topology is
-  * exact: corpus owns buckets A and B; the batch brings one corpus dup,
-  * one within-batch dup pair, and one clean doc.
+/** MinHashLSH.committedIncrementalDedupBucketed — the persisted-index
+  * batch dedup (gates d13/d16). Driven with explicit band frames so the
+  * collision topology is exact: corpus owns buckets A and B; the batch
+  * brings one corpus dup, one within-batch dup pair, and one clean doc.
   */
 class IncrementalDedupSpec extends SparkSpec {
 
@@ -26,18 +26,24 @@ class IncrementalDedupSpec extends SparkSpec {
     (13L, 0, "D"),
   ).toDF("doc_id", "band", "h")
 
-  private def freshIndex(): String = {
-    val dir = graft.queries.Scratch.dir("inc_dedup_").resolve("idx").toString
-    corpusBands.write.parquet(dir)
-    dir
+  /** (index dir, verdict dir) of a fresh index backfilled from `corpus` */
+  private def freshIndex(corpus: org.apache.spark.sql.DataFrame = corpusBands)
+      : (String, String) = {
+    val base = graft.queries.Scratch.dir("inc_dedup_")
+    val dir = base.resolve("idx").toString
+    MinHashLSH.buildBucketedIndex(corpus, dir)
+    (dir, base.resolve("verdicts").toString)
   }
 
-  private def verdicts(df: org.apache.spark.sql.DataFrame): Map[Long, (Boolean, Boolean, Boolean)] =
-    df.collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2), r.getBoolean(3)))).toMap
+  private def dedup(batch: org.apache.spark.sql.DataFrame, dirs: (String, String),
+                    batchId: Long): Map[Long, (Boolean, Boolean, Boolean)] =
+    MinHashLSH.committedIncrementalDedupBucketed(batch, "doc_id", dirs._1, dirs._2, batchId)
+      .collect().map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[Boolean]("dup_of_corpus"), r.getAs[Boolean]("dup_in_batch"),
+          r.getAs[Boolean]("admitted")))).toMap
 
   test("batch verdicts: corpus dup, keep-first within batch, clean admit") {
-    val idx = freshIndex()
-    val v = verdicts(MinHashLSH.incrementalDedup(batchBands, "doc_id", idx))
+    val v = dedup(batchBands, freshIndex(), 0L)
     assert(v(10L) === ((true, false, false)))
     assert(v(11L) === ((false, false, true)))
     assert(v(12L) === ((false, true, false)))
@@ -45,18 +51,22 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("append maintains the index: admitted bands land, nothing else") {
-    val idx = freshIndex()
-    MinHashLSH.incrementalDedup(batchBands, "doc_id", idx).collect()
-    val after = spark.read.parquet(idx).select("doc_id").distinct()
-      .as[Long].collect().toSet
+    val dirs = freshIndex()
+    dedup(batchBands, dirs, 0L)
+    val idx = spark.read.parquet(dirs._1)
     // corpus docs + the two admitted batch docs; dups 10/12 NOT indexed
-    assert(after === Set(1L, 2L, 11L, 13L))
+    assert(idx.select("doc_id").distinct().as[Long].collect().toSet ===
+      Set(1L, 2L, 11L, 13L))
+    // and the admitted bands are exactly the batch's generation
+    assert(idx.where(col("gen") === 0).select("doc_id").as[Long].collect().toSet ===
+      Set(11L, 13L))
   }
 
   test("replaying the same batch after the append admits nothing") {
-    val idx = freshIndex()
-    MinHashLSH.incrementalDedup(batchBands, "doc_id", idx).collect()
-    val v = verdicts(MinHashLSH.incrementalDedup(batchBands, "doc_id", idx))
+    val dirs = freshIndex()
+    dedup(batchBands, dirs, 0L)
+    // redelivered under a NEW batch id, so it is judged afresh
+    val v = dedup(batchBands, dirs, 1L)
     // THE replay invariant: at-least-once redelivery cannot
     // double-ingest — nothing is admitted on the second pass
     assert(v.values.forall(_._3 === false))
@@ -72,35 +82,29 @@ class IncrementalDedupSpec extends SparkSpec {
     // nothing appends — on replay 11 is still dup_in_batch, NOT
     // dup_of_corpus. `admitted`, not `dup_of_corpus`, is the replay
     // signal a consumer must key on.
-    val idx = graft.queries.Scratch.dir("inc_dedup_cx_").resolve("idx").toString
-    Seq((1L, 0, "A")).toDF("doc_id", "band", "h").write.parquet(idx)
+    val dirs = freshIndex(Seq((1L, 0, "A")).toDF("doc_id", "band", "h"))
     val batch = Seq((10L, 0, "A"), (10L, 0, "C"), (11L, 0, "C"))
       .toDF("doc_id", "band", "h")
-    val first = verdicts(MinHashLSH.incrementalDedup(batch, "doc_id", idx))
+    val first = dedup(batch, dirs, 0L)
     assert(first(10L) === ((true, false, false)))
     assert(first(11L) === ((false, true, false)))
-    val replay = verdicts(MinHashLSH.incrementalDedup(batch, "doc_id", idx))
+    val replay = dedup(batch, dirs, 1L)
     assert(replay === first)
     assert(replay.values.forall(_._3 === false))
-  }
-
-  test("appendAdmitted=false probes without mutating the index") {
-    val idx = freshIndex()
-    MinHashLSH.incrementalDedup(batchBands, "doc_id", idx,
-      appendAdmitted = false).collect()
-    assert(spark.read.parquet(idx).select("doc_id").distinct()
-      .as[Long].collect().toSet === Set(1L, 2L))
   }
 
   test("maintenance cost tracks the batch: corpus is never re-read for verdicts") {
     // the index probe must keep the batch side broadcast — the plan
     // may not shuffle the index scan (exchange on the big side would
     // be the 100 TB killer)
-    val idx = freshIndex()
-    // the gate result is a LogicalRDD wrapper (cache-decoupling, see
-    // incrementalDedup), so assert on the LAZY verdict plan behind it
-    val res = MinHashLSH.incrementalVerdictPlan(
-      batchBands, "doc_id", spark.read.parquet(idx))
+    val (idx, _) = freshIndex()
+    // the entry returns a read of its committed verdicts, so assert on
+    // the LAZY verdict plan it commits, over the pruned read it runs
+    val probedHb = MinHashLSH.withHashBucket(batchBands)
+      .select("hb").distinct().as[Int].collect().toSeq.sorted
+    val res = MinHashLSH.incrementalVerdictPlan(batchBands, "doc_id",
+      MinHashLSH.prunedBucketedIndex(spark, idx, probedHb)
+        .select("doc_id", "band", "h"))
     val p = res.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       s"expected a broadcast probe of the persisted index, got:\n$p")
