@@ -534,45 +534,30 @@ object VectorOps {
     }
   }
 
-  /** EXACTLY-ONCE per-batch append into a cell-partitioned IVF index
-    * (the e18 commit discipline for vectors, used by the s16 streaming
-    * face): each micro-batch's assigned rows land under their own
-    * generation directory `gen=<batchId>/cell=.../` — written to a
-    * hidden tmp sibling first, then published with ONE atomic dir
-    * rename, so a replayed batchId is a pure skip (the gen dir already
-    * exists) and a crashed half-write is invisible (hidden tmp). The
-    * serve path reads the index root: partition discovery surfaces
-    * (gen, cell) and cell pruning still prunes inside every
-    * generation; `gen` is dropped before scoring. A plain
-    * `SaveMode.Append` here would double-ingest vectors on
-    * at-least-once replay — duplicate index rows change top-k results,
-    * unlike the band index where dup_of_corpus is an EXISTS.
-    */
-  def committedCellAppend(assigned: DataFrame, indexDir: String,
-                          batchId: Long): Boolean =
-    graft.sources.Sinks.committedPartitionedAppend(assigned, indexDir, batchId, "cell")
-
-  /** BUCKETED-CELL store layout — the 100 TB replacement for the
-    * `cell=<id>` directory-per-cell scheme, whose per-directory
-    * metadata cost walls at ~10⁵ cells (a filesystem/object-store
-    * listing limit, far below the k ≈ 10¹⁰ the dist tier can now
-    * compute; at the gated k = n/100 policy the per-directory layout
-    * caps a store at ~10⁷ vectors per generation). Here the PARTITION
-    * key is `cell_bucket = cell % B` (B chosen once, recorded in the
-    * sibling `__layout` marker — the banded index's contract, shared
-    * code) and `cell` rides as a DATA column; rows are shuffled to
-    * their bucket and written cell-sorted, so every (gen, bucket) is
-    * ONE file with cell-clustered row groups. The serve's two-level
-    * prune: the probed-cell list maps to `probed % B` bucket dirs (a
-    * pure partition prune, ≤ B directories ever listed no matter how
-    * many cells exist), and `cell IN (probed)` pushes into the parquet
-    * scan where the sorted layout makes it a row-group min/max skip.
-    * Directory count per generation is bounded by B — independent of
-    * the cell count — which is what converts the dist tier's compute
-    * headroom into an end-to-end store claim.
+  /** EXACTLY-ONCE per-batch append into the IVF cell store. The
+    * PARTITION key is `cell_bucket = cell % B` (B chosen once, recorded
+    * in the sibling `__layout` marker — the banded index's contract,
+    * shared code) and `cell` rides as a DATA column; rows are shuffled
+    * to their bucket and written cell-sorted, so every (gen, bucket) is
+    * ONE file with cell-clustered row groups. Directory count per
+    * generation is bounded by B, independent of the cell count: a
+    * directory per cell walls at ~10⁵ cells (a filesystem/object-store
+    * listing limit, far below the k ≈ 10¹⁰ the dist tier can compute).
+    * The serve's two-level prune: the probed-cell list maps to
+    * `probed % B` bucket dirs (a pure partition prune), and
+    * `cell IN (probed)` pushes into the parquet scan where the sorted
+    * layout makes it a row-group min/max skip.
+    *
+    * Each batch lands under its own `gen=<batchId>` directory through
+    * [[graft.sources.Sinks.committedPartitionedAppend]] (hidden tmp,
+    * then ONE atomic rename), so a replayed batchId is a pure skip and
+    * a crashed half-write is invisible. A plain `SaveMode.Append` would
+    * double-ingest vectors on at-least-once replay — duplicate index
+    * rows change top-k results, unlike the band index where
+    * dup_of_corpus is an EXISTS.
     */
   def committedBucketedCellAppend(assigned: DataFrame, indexDir: String,
-                                  batchId: Long, buckets: Int = 64): Boolean = {
+                                  batchId: Long, buckets: Int): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       assigned.sparkSession.sparkContext.hadoopConfiguration)
     // the cell id space is the dist tier's (k ≈ 10¹⁰) — WRITE bigint
@@ -609,106 +594,20 @@ object VectorOps {
     math.min(4096L, math.max(16L,
       java.lang.Long.highestOneBit(math.max(1L, nlist)))).toInt
 
-  /** THE default store append for IVF cell indexes — auto-dispatching
-    * layout (VERDICT r13 directive 1: a user at scale must not get the
-    * walled layout by default).
-    *
-    * The flat `cell=<id>` directory-per-cell layout is optimal ONLY for
-    * a FIXED small codebook (tens of cells — the s13-s19 nlist=4 tier):
-    * its per-directory metadata cost walls at ~10⁵ cells (PERF.md,
-    * "Round 13 — the bucketed-cell store layout"). The layout is a
-    * WRITE-ONCE contract (the __layout marker refuses mixed writers), so
-    * a store cannot switch layouts as its codebook grows — which means
-    * the dispatch must key on the POLICY, not on today's observed nlist:
-    * a corpus-scaled nlist (the k = n/100 family) starts small at small
-    * SF and crosses the wall in production, exactly when a rewrite is
-    * most expensive.
-    *
-    * Hence: the default is BUCKETED (`cell_bucket = cell % B` partition
-    * key, B = [[defaultBuckets]] at first write, then the marker's B
-    * forever). Flat is an explicit opt-in (`fixedNlist = true`) and
-    * even then only below [[FlatLayoutMaxCells]]; an opt-in above the
-    * bound refuses loudly rather than planting a store that cannot
-    * scale.
+  /** THE store append for IVF cell indexes: a store that already
+    * carries a `__layout` marker keeps its B forever (the marker
+    * refuses a differing writer), a new store takes
+    * [[defaultBuckets]] of the codebook's nlist at its first write. B
+    * keys on the first write, not on today's nlist, because a
+    * corpus-scaled nlist (the k = n/100 family) grows with every
+    * landing while the layout is write-once.
     */
-  val FlatLayoutMaxCells = 64
-
   def committedCellAppendAuto(assigned: DataFrame, indexDir: String,
-                              batchId: Long, nlist: Long,
-                              fixedNlist: Boolean = false): Boolean = {
+                              batchId: Long, nlist: Long): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       assigned.sparkSession.sparkContext.hadoopConfiguration)
-    graft.sources.Sinks.layoutMarkerOpt(fs, indexDir) match {
-      case Some(b) => // existing bucketed store: its B wins, always
-        committedBucketedCellAppend(assigned, indexDir, batchId, b)
-      case None if fixedNlist =>
-        require(nlist <= FlatLayoutMaxCells,
-          s"flat cell=<id> layout requested for nlist=$nlist — the " +
-            s"per-directory layout is only sane below $FlatLayoutMaxCells " +
-            "cells (it walls at ~1e5 dirs, PERF.md round 13); drop " +
-            "fixedNlist to get the bucketed layout")
-        committedCellAppend(assigned, indexDir, batchId)
-      case None if hasFlatCellData(fs, indexDir) =>
-        // pre-existing FLAT store from a marker-less (round-13) writer:
-        // planting a __layout marker and writing cell_bucket partitions
-        // NEXT TO gen=*/cell=* dirs would corrupt the store with mixed
-        // partition schemes AFTER the append already "committed"
-        // (ADVICE r14, medium). Keep appending flat while the layout is
-        // still inside its sane bound; refuse loudly past it.
-        require(nlist <= FlatLayoutMaxCells,
-          s"$indexDir holds an existing flat cell=<id> store (no __layout " +
-            s"marker) but nlist=$nlist exceeds $FlatLayoutMaxCells — the " +
-            "flat layout cannot scale there and a bucketed append would " +
-            "corrupt the store with mixed partition schemes; rebuild into " +
-            "a fresh bucketed dir (committedBucketedCellAppend)")
-        committedCellAppend(assigned, indexDir, batchId)
-      case None =>
-        committedBucketedCellAppend(assigned, indexDir, batchId,
-          defaultBuckets(nlist))
-    }
-  }
-
-  /** Does `indexDir` already hold flat-laid-out (gen=<id>/cell=<id>)
-    * data from a marker-less writer? One root listing plus one child
-    * listing of the first generation — bounded, and only reached on
-    * the no-marker arm (a brand-new dir short-circuits on exists).
-    */
-  private def hasFlatCellData(fs: org.apache.hadoop.fs.FileSystem,
-                              indexDir: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    fs.exists(root) && {
-      val gens = fs.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith("gen="))
-      gens.nonEmpty && fs.listStatus(gens.head)
-        .exists(_.getPath.getName.startsWith("cell="))
-    }
-  }
-
-  /** Layout-aware compaction: dispatches on the store's __layout marker
-    * so lifecycle code (s22/s23-style) is layout-blind like the serve.
-    */
-  def compactCells(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (graft.sources.Sinks.layoutMarkerOpt(fs, indexDir).isDefined)
-      compactBucketedCells(spark, indexDir)
-    else
-      graft.sources.Sinks.compactGenerations(spark, indexDir, Some("cell"))
-  }
-
-  /** Layout-aware row-level delete — the takedown face of
-    * [[compactCells]]'s dispatch.
-    */
-  def deleteFromCells(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String,
-                      keep: DataFrame => DataFrame): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (graft.sources.Sinks.layoutMarkerOpt(fs, indexDir).isDefined)
-      deleteFromBucketedCells(spark, indexDir, keep)
-    else
-      graft.sources.Sinks.rewriteGenerations(spark, indexDir, Some("cell"), keep)
+    committedBucketedCellAppend(assigned, indexDir, batchId,
+      graft.sources.Sinks.layoutMarkerOpt(fs, indexDir).getOrElse(defaultBuckets(nlist)))
   }
 
   /** The marker cell-TYPE assert of the serve contract (VERDICT r13
@@ -727,40 +626,38 @@ object VectorOps {
           "rebuild the store or fix the writer")
     }
 
-  /** Probed cells up to which the bucketed serve filters `cell` by a
-    * literal list; above it, by a broadcast left-semi join.
+  /** Probed cells up to which the serve filters `cell` by a literal
+    * list; above it, by a broadcast left-semi join.
     */
   private val IsinMaxCells = 128
 
-  /** The probed-cell SERVE SCAN over a persisted cell store, layout-
-    * dispatched on the __layout marker — ONE copy of the contract every
-    * IVF serve (flat s13-s19, two-level s20-s23, dist s24/s25, bucketed
-    * s26-s30) reads through. The probed cells come as a FRAME
-    * (`cell: bigint`), so the driver payload is bounded by construction:
-    * one `limit(IsinMaxCells + 1)` collect decides the dispatch — if the
-    * distinct probed cells fit, that slice IS the complete set (limit
-    * n+1 of an ≤n-row frame returns every row).
+  /** The probed-cell SERVE SCAN over a persisted cell store — ONE copy
+    * of the contract every IVF serve (s13-s30) reads through. The
+    * store's B comes from its `__layout` marker: an unmarked dir was
+    * not written by [[committedBucketedCellAppend]] and refuses, as a
+    * guessed bucket count would silently prune live rows. The probed
+    * cells come as a FRAME (`cell: bigint`), so the driver payload is
+    * bounded by construction: one `limit(IsinMaxCells + 1)` collect
+    * decides the dispatch — if the distinct probed cells fit, that
+    * slice IS the complete set (limit n+1 of an ≤n-row frame returns
+    * every row).
     *
-    *  - BUCKETED: the probed cells map to their `cell % B` bucket dirs
-    *    — a STATIC partition prune bounded by B literals no matter how
-    *    many cells exist. Up to IsinMaxCells probed cells the cell
-    *    filter is a literal In(cell, ...) pushed into the parquet scan
-    *    (a row-group min/max skip over the cell-sorted files; NOTE
-    *    parquet converts In to a min/max RANGE above
-    *    spark.sql.parquet.pushdown.inFilterThreshold=10 probed cells —
-    *    still a skip on sorted files, pinned in BucketedIvfSpec). Above
-    *    it the driver collects only the distinct BUCKETS (≤ B) and the
-    *    cell filter is a broadcast LEFT SEMI join against the frame, so
-    *    a 10⁵-query batch neither ships its cells through the driver
-    *    nor inflates the plan with 10⁵·nprobe literals. The marker's
-    *    recorded cell TYPE is asserted against the scanned schema — a
-    *    truncation-class drift refuses loudly (VERDICT r13 directive 8).
-    *  - FLAT: `cell` IS the (int-typed) partition column and the probed
-    *    list is bounded by the fixed small nlist, so the literal isin
-    *    stays the right shape; the scan normalizes cell to bigint AFTER
-    *    the prune so consumers join Long keys on either layout.
+    * The probed cells map to their `cell % B` bucket dirs — a STATIC
+    * partition prune bounded by B literals no matter how many cells
+    * exist. Up to IsinMaxCells probed cells the cell filter is a
+    * literal In(cell, ...) pushed into the parquet scan (a row-group
+    * min/max skip over the cell-sorted files; NOTE parquet converts In
+    * to a min/max RANGE above spark.sql.parquet.pushdown.inFilterThreshold=10
+    * probed cells — still a skip on sorted files, pinned in
+    * BucketedIvfSpec). Above it the driver collects only the distinct
+    * BUCKETS (≤ B) and the cell filter is a broadcast LEFT SEMI join
+    * against the frame, so a 10⁵-query batch neither ships its cells
+    * through the driver nor inflates the plan with 10⁵·nprobe literals.
+    * The marker's recorded cell TYPE is asserted against the scanned
+    * schema — a truncation-class drift refuses loudly (VERDICT r13
+    * directive 8).
     *
-    * Both layouts read through [[graft.sources.Sinks.readGenerations]],
+    * The read goes through [[graft.sources.Sinks.readGenerations]],
     * which resolves the probed dirs and the schema on the driver and
     * holds the as-of contract: `asOf` keeps generations ≤ the snapshot
     * on the same scan and refuses past the compaction horizon.
@@ -770,38 +667,27 @@ object VectorOps {
                               asOf: Option[Long] = None): DataFrame = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
+    val b = graft.sources.Sinks.readLayoutMarker(fs, indexDir)
     val cells = probeCells.select(col("cell")).distinct()
     val slice = cells.limit(IsinMaxCells + 1).collect().map(_.getLong(0)).sorted
     val literal = slice.length <= IsinMaxCells
-    def read(partCol: String, values: Seq[Int]) =
-      graft.sources.Sinks.readGenerations(spark, indexDir, asOf, Some(partCol -> values))
-    graft.sources.Sinks.layoutMarkerOpt(fs, indexDir) match {
-      case Some(b) =>
-        val bks =
-          if (literal) slice.map(c => Math.floorMod(c, b.toLong).toInt).distinct.sorted.toSeq
-          else cells.select(pmod(col("cell"), lit(b.toLong)).cast("int"))
-            .distinct().collect().map(_.getInt(0)).sorted.toSeq
-        val base = read("cell_bucket", bks)
-        assertMarkerCellType(fs, indexDir, base)
-        val cellFiltered =
-          if (literal) base.where(col("cell").isin(slice: _*))
-          // re-select the scan's column order: a USING join hoists the
-          // key first, and the two arms must be drop-in equal
-          else base.join(broadcast(cells), Seq("cell"), "left_semi")
-            .select(base.columns.map(col): _*)
-        cellFiltered.drop("cell_bucket")
-      case None =>
-        // flat stores hold ≤ FlatLayoutMaxCells cells, under
-        // IsinMaxCells, so the slice is the whole probed set; partition
-        // values are inferred as int, and the bigint normalization is a
-        // post-prune projection
-        val all = if (literal) slice else cells.collect().map(_.getLong(0)).sorted
-        read("cell", all.map(_.toInt).toSeq)
-          .withColumn("cell", col("cell").cast("bigint"))
-    }
+    val bks =
+      if (literal) slice.map(c => Math.floorMod(c, b.toLong).toInt).distinct.sorted.toSeq
+      else cells.select(pmod(col("cell"), lit(b.toLong)).cast("int"))
+        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+    val base = graft.sources.Sinks.readGenerations(spark, indexDir, asOf,
+      Some("cell_bucket" -> bks))
+    assertMarkerCellType(fs, indexDir, base)
+    val cellFiltered =
+      if (literal) base.where(col("cell").isin(slice: _*))
+      // re-select the scan's column order: a USING join hoists the
+      // key first, and the two arms must be drop-in equal
+      else base.join(broadcast(cells), Seq("cell"), "left_semi")
+        .select(base.columns.map(col): _*)
+    cellFiltered.drop("cell_bucket")
   }
 
-  /** Fold a bucketed-cell store's generations into one (the s18/s29
+  /** Fold a bucketed-cell store's generations into one (the s18/s22/s29
     * compaction face): the bucket layout AND the in-file cell sort are
     * both part of the on-disk contract, so the rewrite re-clusters by
     * (cell_bucket, cell) — a fold that lost the sort would silently
@@ -812,8 +698,8 @@ object VectorOps {
     graft.sources.Sinks.compactGenerations(spark, indexDir,
       Some("cell_bucket"), sortWithin = Seq("cell_bucket", "cell"))
 
-  /** Row-level delete on a bucketed-cell store (the s17/s28 takedown
-    * face) — fold + filter in one swap, layout contract preserved.
+  /** Row-level delete on a bucketed-cell store (the s17/s23/s28
+    * takedown face) — fold + filter in one swap, layout contract preserved.
     */
   def deleteFromBucketedCells(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String,

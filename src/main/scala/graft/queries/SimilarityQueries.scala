@@ -61,6 +61,8 @@ object SimilarityQueries extends QueryPack {
     * key includes the session so a restarted session (or another
     * session in the same JVM) retrains rather than reusing stale state.
     */
+  private val trainedNlist = 4
+
   private val codebookCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Seq[(Int, Array[Double])]]()
 
@@ -71,7 +73,7 @@ object SimilarityQueries extends QueryPack {
   private def trainedCodebook(s: SparkSession, d: String): Seq[(Int, Array[Double])] =
     codebookCache.computeIfAbsent((s, d), { _ =>
       codebookFits.incrementAndGet()
-      graft.operators.KMeansLite.fit(vecs(s, d), "vec_id", "v", 4, 1)
+      graft.operators.KMeansLite.fit(vecs(s, d), "vec_id", "v", trainedNlist, 1)
     })
 
   /** s15's STALE codebook: trained on the original population only
@@ -99,17 +101,16 @@ object SimilarityQueries extends QueryPack {
       (cid.toLong, cv, nn)
     }
 
-  /** The SHARED s13/s14/s16 serve path over a persisted cell-
-    * partitioned index: nprobe=2 probes for queries vec_id < 3
-    * (collected — bounded driver state), a PARTITION-PRUNED read of the
-    * probed cell directories (VectorOps.prunedCellScanFromFrame: the
-    * store reader resolves the probed dirs of every generation ≤ asOf
-    * and drops `gen`), broadcast cell equi-join, exact
-    * cosine top-5. One copy — the gates differ only in how the index
-    * got onto disk. `cents` is used ONLY to build the default flat
-    * probe; when `probe` is supplied (the two-level gates) the
-    * codebook plays no role in the serve — routing lives entirely in
-    * the probe UDF.
+  /** The SHARED s13-s30 serve path over a persisted cell store:
+    * nprobe=2 probes for queries vec_id < 3 (collected — bounded driver
+    * state), a PARTITION-PRUNED read of the probed cells' bucket
+    * directories (VectorOps.prunedCellScanFromFrame: the store reader
+    * resolves the probed dirs of every generation ≤ asOf and drops
+    * `gen`), broadcast cell equi-join, exact cosine top-5. One copy —
+    * the gates differ only in how the index got onto disk. `cents` is
+    * used ONLY to build the default single-level probe; when `probe` is
+    * supplied (the two-level gates) the codebook plays no role in the
+    * serve — routing lives entirely in the probe UDF.
     */
   private def serveTopkFromIndex(s: SparkSession, idxDir: String,
                                  cents: Seq[(Long, Array[Double], Double)],
@@ -118,7 +119,7 @@ object SimilarityQueries extends QueryPack {
                                  probe: Option[org.apache.spark.sql.expressions.UserDefinedFunction] = None,
                                  probeDf: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // probe routing: a UDF (flat / two-level closure codebooks) or a
+    // probe routing: a UDF (single- / two-level closure codebooks) or a
     // pre-computed (qid, cell) DataFrame (the centroids-as-DataFrame
     // tier's ivfProbeHierDist — s25) joined to the query vectors; the
     // serve downstream is identical either way
@@ -137,9 +138,9 @@ object SimilarityQueries extends QueryPack {
     // probe cache too — a refusal per serve
     // must not leak a pinned frame (ADVICE r14, low)
     try {
-      // cell ids stay LONG end-to-end (the bucketed layout's cell is a
-      // bigint data column; its id space is the dist tier's k ≈ 10¹⁰);
-      // the scan itself — layout dispatch on the __layout marker, the
+      // cell ids stay LONG end-to-end (the store's cell is a bigint
+      // data column; its id space is the dist tier's k ≈ 10¹⁰); the
+      // scan itself — B from the __layout marker, the
       // static bucket prune / literal-vs-semi-join cell filter size
       // dispatch, the as-of horizon contract, the marker type assert —
       // is VectorOps.prunedCellScanFromFrame (the serve feeds the probe
@@ -148,11 +149,8 @@ object SimilarityQueries extends QueryPack {
       val index = VectorOps.prunedCellScanFromFrame(
         s, idxDir, q.select("cell"), asOf)
       val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      // the scan normalizes cell to bigint on either layout, so the
-      // probe frame's Long cells join unchanged
-      val qKeyed = q
       val topk = index
-        .join(broadcast(qKeyed), Seq("cell"))
+        .join(broadcast(q), Seq("cell"))
         .where(col("vec_id") =!= col("qid"))
         .withColumn("cos", round(cosExpr, 6))
         .withColumn("rank", row_number().over(w))
@@ -692,22 +690,20 @@ object SimilarityQueries extends QueryPack {
       Some(duckIvfTrainedTopk)),
 
     // ---- IVF served from a PERSISTED index (the deployment shape of
-    // s9): the trained-codebook assignment is written ONCE as parquet
-    // `partitionBy(cell)` — the directory layout IS the inverted file,
-    // one directory per cell. The query path is a FRESH read of that
-    // index filtered to the probed cells (probe list = nqueries×nprobe
-    // ids, collected — bounded driver state), so the scan partition-
-    // prunes to the probed directories and the unprobed corpus is never
-    // listed, read, or decoded (IvfIndexSpec pins the PartitionFilters
-    // in the plan). Same top-k as s9 — build once, serve many; oracle
+    // s9): the trained-codebook assignment is written ONCE through the
+    // store writer search_serve uses (VectorOps.committedCellAppendAuto:
+    // `cell_bucket = cell % B` dirs, cell-sorted files). The query path
+    // is a FRESH read of that index filtered to the probed cells (probe
+    // list = nqueries×nprobe ids, collected — bounded driver state), so
+    // the scan partition-prunes to the probed cells' bucket directories
+    // and skips unprobed row groups (BucketedIvfSpec pins both in the
+    // executed plan). Same top-k as s9 — build once, serve many; oracle
     // shared with s9 since only the serving path differs.
     Q("s13_ivf_index_served",
       (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
+        val (e, cents, assigned) = frozenAssign(s, d)
         val idxDir = Scratch.dir("graft_s13_").resolve("ivf").toString
-        e.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-          .write.partitionBy("cell").parquet(idxDir)
+        autoWriter(assigned(e), idxDir, -1L)
         serveTopkFromIndex(s, idxDir, cents, e)
       },
       Some(duckIvfTrainedTopk)),
@@ -715,27 +711,14 @@ object SimilarityQueries extends QueryPack {
     // ---- IVF index MAINTENANCE (the d13 story for vectors): new
     // embeddings land AFTER the index was built — they are assigned
     // under the FROZEN codebook (no retrain, no corpus re-encode) and
-    // APPENDED to the cell-partitioned index, landing inside the
-    // existing cell directories. The serve path is byte-identical to
-    // s13 and must see both generations — the oracle is the full-corpus
-    // restatement, so any append loss, layout drift, or double-write
-    // fails the hash. Maintenance cost tracks |batch|: one zero-shuffle
-    // assignment pass plus a partitioned append.
+    // APPENDED to the cell store as a second generation. The serve
+    // path is s13's and must see both generations — the oracle is the
+    // full-corpus restatement, so any append loss, layout drift, or
+    // double-write fails the hash. Maintenance cost tracks |batch|: one
+    // zero-shuffle assignment pass plus one bucket shuffle of the batch.
+    // s27 runs the same body with an explicit B.
     Q("s14_ivf_index_append",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        def assigned(df: org.apache.spark.sql.DataFrame) =
-          df.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-        val idxDir = Scratch.dir("graft_s14_").resolve("ivf").toString
-        // generation 1: the historical corpus
-        assigned(e.where(col("vec_id") % 4 =!= 3))
-          .write.partitionBy("cell").parquet(idxDir)
-        // generation 2: the landing batch, frozen-codebook assign + append
-        assigned(e.where(col("vec_id") % 4 === 3))
-          .write.mode("append").partitionBy("cell").parquet(idxDir)
-        serveTopkFromIndex(s, idxDir, cents, e)
-      },
+      (s, d) => appendServe(s, d, "s14", autoWriter),
       Some(duckIvfTrainedTopk)),
 
     // ---- IVF STALENESS under the frozen codebook (the s14 risk,
@@ -846,84 +829,37 @@ object SimilarityQueries extends QueryPack {
               FROM rec JOIN qids ON rec.qid = qids.qid""")),
 
     // ---- STREAMING IVF index maintenance (s16): the e18 story for
-    // vectors — embeddings ARRIVE AS A STREAM and the cell-partitioned
-    // index is maintained per micro-batch under the frozen trained
-    // codebook (assign is a zero-shuffle map over the batch; the
-    // corpus is never re-encoded). Appends are EXACTLY-ONCE per
-    // batchId: each batch publishes its own gen=<id> directory with
-    // one atomic rename (VectorOps.committedCellAppend), so
-    // at-least-once replay is a pure skip — a plain append would
-    // double-ingest vectors, and duplicate index rows change top-k
-    // (unlike the band index's EXISTS semantics). Two landings are
-    // driven; the serve path afterwards is byte-identical to s13/s14
-    // (partition-pruned read over (gen, cell)) and must see the
-    // backfill plus both streamed generations — the oracle is the
-    // full-corpus restatement shared with s9/s13/s14, so any append
-    // loss, duplication, or layout drift fails the hash.
+    // vectors — embeddings ARRIVE AS A STREAM and the cell store is
+    // maintained per micro-batch under the frozen trained codebook
+    // (assign is a zero-shuffle map over the batch; the corpus is never
+    // re-encoded). Appends are EXACTLY-ONCE per batchId: each batch
+    // publishes its own gen=<id> directory with one atomic rename
+    // (VectorOps.committedCellAppendAuto), so at-least-once replay is a
+    // pure skip — a plain append would double-ingest vectors, and
+    // duplicate index rows change top-k (unlike the band index's EXISTS
+    // semantics). Two landings are driven (streamHeldOut); the serve
+    // afterwards is s13's and must see the backfill plus both streamed
+    // generations — the oracle is the full-corpus restatement shared
+    // with s9/s13/s14, so any append loss, duplication, or layout drift
+    // fails the hash. s30 runs the same body with an explicit B.
     Q("s16_stream_ivf_append",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        def assigned(df: org.apache.spark.sql.DataFrame) =
-          df.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-        val idxDir = Scratch.dir("graft_s16_").resolve("ivf").toString
-        // backfill generation (gen=-1): the historical corpus
-        VectorOps.committedCellAppend(
-          assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L)
-        // the appended quarter arrives as a STREAM in two landings
-        val raw = Tables.embeddings(s, d)
-        val stage = Scratch.dir("graft_s16_stage_").toString
-        raw.where(col("vec_id") % 8 === 3)
-          .coalesce(1).write.mode("append").parquet(stage)
-        val ckpt = Scratch.dir("graft_s16_ck_").toString
-        val q = s.readStream.schema(raw.schema).parquet(stage)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            if (!batch.isEmpty) {
-              graft.GraftExtensions.registerNative(s)
-              VectorOps.committedCellAppend(
-                assigned(VectorOps.vecs(batch)
-                  .select("vec_id", "label", "v", "nn")), idxDir, bid)
-              ()
-            }
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          raw.where(col("vec_id") % 8 === 7)
-            .coalesce(1).write.mode("append").parquet(stage)
-          q.processAllAvailable()
-        } finally q.stop()
-        // serve exactly like s13/s14: partition-pruned read of the
-        // probed cells across every generation
-        serveTopkFromIndex(s, idxDir, cents, e)
-      },
+      (s, d) => streamServe(s, d, "s16", autoWriter),
       Some(duckIvfTrainedTopk)),
 
     // ---- IVF index DELETE (s17): the takedown path for the served
     // vector store — the CRUD face the keep-list tier got in d21, via
-    // the SAME generalized rewrite (Sinks.rewriteGenerations folds the
-    // generations AND drops the deleted vectors in one swap; the
+    // the SAME generalized rewrite (VectorOps.deleteFromBucketedCells
+    // folds the generations AND drops the deleted vectors in one swap,
+    // re-clustered so serves still prune and row-group-skip; the
     // manifest keeps any folded batch ids as replay skips). The
     // codebook stays FROZEN (deletes do not retrain, exactly like
-    // appends under s14); the serve path is byte-identical to
-    // s13/s14/s16 and must see only survivors — a query's top-k must
-    // back-fill from remaining in-cell neighbors, which the
-    // restricted-population oracle restates exactly (deleted vec 0
-    // stays a valid EXTERNAL query: queries are not corpus rows).
+    // appends under s14); the serve path is s13's and must see only
+    // survivors — a query's top-k must back-fill from remaining in-cell
+    // neighbors, which the restricted-population oracle restates
+    // exactly (deleted vec 0 stays a valid EXTERNAL query: queries are
+    // not corpus rows). s28 runs the same body with an explicit B.
     Q("s17_ivf_delete",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        val idxDir = Scratch.dir("graft_s17_").resolve("ivf").toString
-        VectorOps.committedCellAppend(
-          e.withColumn("cell",
-            VectorOps.ivfAssignUdf(cents)(col("v"), col("nn"))), idxDir, -1L)
-        graft.sources.Sinks.rewriteGenerations(s, idxDir, Some("cell"),
-          df => df.where(col("vec_id") % 9 =!= 0))
-        serveTopkFromIndex(s, idxDir, cents, e)
-      },
+      (s, d) => deleteServe(s, d, "s17", autoWriter),
       Some(duckIvfTrainedTopkOn("vec_id % 9 <> 0"))),
 
     // ---- IVF SNAPSHOT serving (s18): d23's time-travel contract on
@@ -934,44 +870,15 @@ object SimilarityQueries extends QueryPack {
     // the same scan. Three landings (backfill, two appends); the
     // snapshot at batch 0 must rank WITHOUT batch 1's vectors — any
     // leak shows up as a different top-k because later neighbors
-    // displace earlier ones. Then compactGenerations folds the store
+    // displace earlier ones. Then compactBucketedCells folds the store
     // and the gate pins the horizon contract: the batch-0 snapshot now
     // REFUSES loudly (manifest max folded id > asOf), while the at-head
     // snapshot still equals the current serve (gen=-1 ≤ 1). Both
     // asserted in `asof_contract`; oracle = the frozen-codebook top-k
-    // over exactly the ≤-batch-0 population.
+    // over exactly the ≤-batch-0 population. s29 runs the same body
+    // with an explicit B.
     Q("s18_ivf_asof",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        def assigned(df: org.apache.spark.sql.DataFrame) =
-          df.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-        val base = Scratch.dir("graft_s18_")
-        val idxDir = base.resolve("ivf").toString
-        VectorOps.committedCellAppend(
-          assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L)
-        VectorOps.committedCellAppend(
-          assigned(e.where(col("vec_id") % 8 === 3)), idxDir, 0L)
-        VectorOps.committedCellAppend(
-          assigned(e.where(col("vec_id") % 8 === 7)), idxDir, 1L)
-        // materialize the snapshot BEFORE compaction — the serve is
-        // lazy and compaction rewrites the very dirs it reads
-        val matDir = base.resolve("asof0").toString
-        serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(0L))
-          .write.parquet(matDir)
-        graft.sources.Sinks.compactGenerations(s, idxDir, Some("cell"))
-        val loud =
-          try {
-            serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(0L))
-            false
-          } catch { case _: IllegalStateException => true }
-        val atHead = serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(1L))
-          .collect().toSet
-        val current = serveTopkFromIndex(s, idxDir, cents, e)
-          .collect().toSet
-        s.read.parquet(matDir)
-          .withColumn("asof_contract", lit(loud && atHead == current))
-      },
+      (s, d) => asofServe(s, d, "s18", autoWriter),
       Some(s"""SELECT q.*, TRUE AS asof_contract FROM (
               ${duckIvfTrainedTopkOn("vec_id % 4 <> 3 OR vec_id % 8 = 3")}) q""")),
 
@@ -1291,18 +1198,16 @@ object SimilarityQueries extends QueryPack {
     // (s21): s20 gates the two-level build/probe as one batch; this is
     // its streamed face under the repo's lifecycle-symmetry rule
     // (every persisted index face gets batch AND stream maintenance —
-    // s16 did this for flat IVF at fixed nlist). Codebooks train ONCE
+    // s16 did this for single-level IVF at fixed nlist). Codebooks train ONCE
     // on the pre-stream backfill at nlist = max(4, n_train/100) and
     // FREEZE (the s15/s16 discipline: appends never retrain); the
     // backfill lands as gen=-1, the held-out quarter arrives as a
     // real stream in two landings, each micro-batch assigned
     // coarse→in-cell by the SAME two-level cosine UDF and published
     // EXACTLY-ONCE via committedCellAppendAuto (atomic gen=<batchId>
-    // rename; replays are pure skips) — since round 14 the scaled-
-    // nlist tier's DEFAULT store is the BUCKETED-CELL layout (k scales
-    // with the corpus, so the flat dir-per-cell layout would wall at
-    // ~1e5 cells; the auto dispatch refuses to plant it). Serve is the
-    // marker-dispatched bucket-pruned read with the TWO-LEVEL probe routing
+    // rename; replays are pure skips) into the bucketed cell store, B
+    // fixed by the backfill's nlist. Serve is the bucket-pruned read
+    // with the TWO-LEVEL probe routing
     // the queries. The oracle is s20's full restatement with te = the
     // backfill population — blind to streaming, batching, and layout,
     // so append loss, duplication, a wrong frozen codebook, or a
@@ -1317,7 +1222,7 @@ object SimilarityQueries extends QueryPack {
 
     // ---- AS-OF serve on the streamed two-level index (s22): closes
     // the lifecycle-symmetry square for the scaled-nlist tier the way
-    // s18 closed it for flat IVF — a training snapshot must be able to
+    // s18 closed it for single-level IVF — a training snapshot must be able to
     // pin WHICH index answered its queries. The store is s21's
     // (backfill gen=-1, two streamed landings at gen=0/1 under frozen
     // two-level codebooks); serve as-of batch 0 is the SAME partition-
@@ -1341,7 +1246,7 @@ object SimilarityQueries extends QueryPack {
         val matDir = Scratch.dir("graft_s22_mat_").resolve("asof0").toString
         serveTopkFromIndex(s, idxDir, fine, e, asOf = Some(0L), probe = probe)
           .write.parquet(matDir)
-        VectorOps.compactCells(s, idxDir) // layout-aware fold
+        VectorOps.compactBucketedCells(s, idxDir)
         val loud =
           try {
             serveTopkFromIndex(s, idxDir, fine, e, asOf = Some(0L), probe = probe)
@@ -1358,12 +1263,11 @@ object SimilarityQueries extends QueryPack {
               ${duckIvfHierTopkOn("vec_id % 4 <> 3", "vec_id % 8 <> 7")}) q""")),
 
     // ---- Takedown on the two-level store (s23): the CRUD face the
-    // scaled-nlist tier was missing — s17 proved delete for flat IVF;
-    // the same layout-aware rewrite (VectorOps.deleteFromCells —
+    // scaled-nlist tier was missing — s17 proved delete for single-level
+    // IVF; the same rewrite (VectorOps.deleteFromBucketedCells —
     // fold + filter in one rename-aside swap, bucket layout AND cell
-    // sort preserved so serves still prune and row-group-skip; the
-    // store is the bucketed DEFAULT since round 14) drops the
-    // deleted vectors here while the
+    // sort preserved so serves still prune and row-group-skip) drops
+    // the deleted vectors here while the
     // TWO-LEVEL codebooks stay frozen (a takedown no more retrains
     // than an append — the codebooks predate it). Serve is the
     // two-level-probed pruned read; every query's top-5 must
@@ -1381,13 +1285,12 @@ object SimilarityQueries extends QueryPack {
         val coarse = withNorms(coarseCb)
         val fine = withNorms(fineCb)
         val idxDir = Scratch.dir("graft_s23_").resolve("ivf").toString
-        // DEFAULT store for the scaled-nlist tier = the auto dispatch
-        // (bucketed — k scales with the corpus; r13 directive 1)
+        // B from the corpus-scaled nlist at first write
         VectorOps.committedCellAppendAuto(
           e.withColumn("cell",
             VectorOps.ivfAssignHierUdf(coarse, fine)(col("v"), col("nn"))),
           idxDir, -1L, nlist = k)
-        VectorOps.deleteFromCells(s, idxDir,
+        VectorOps.deleteFromBucketedCells(s, idxDir,
           df => df.where(col("vec_id") % 9 =!= 0))
         serveTopkFromIndex(s, idxDir, fine, e,
           probe = Some(VectorOps.ivfProbeHierUdf(coarse, fine, 2, 2)))
@@ -1456,8 +1359,7 @@ object SimilarityQueries extends QueryPack {
     // quarter arriving as a real stream where EACH MICRO-BATCH runs
     // the distributed assignment (coarse-route equi-join + keyed
     // window — a join per batch, priced by the batch, never the
-    // corpus) and publishes exactly-once via committedCellAppendAuto
-    // (the bucketed DEFAULT layout — round 14).
+    // corpus) and publishes exactly-once via committedCellAppendAuto.
     // Serve is the s13 partition-pruned read routed by the DIST probe
     // (ivfProbeHierDist's (qid, cell) frame — bounded queries×nprobe
     // rows, collected like the UDF path's probed-cell list). ORACLE
@@ -1477,9 +1379,8 @@ object SimilarityQueries extends QueryPack {
           VectorOps.ivfAssignHierDist(df, "vec_id", coarse, fineDf),
           Seq("vec_id"))
         val idxDir = Scratch.dir("graft_s25_").resolve("ivf").toString
-        // the dist tier stores through the DEFAULT (bucketed) layout —
         // the backfill fixes B from the frozen nlist; every streamed
-        // landing then follows the marker (r13 directive 1)
+        // landing then follows the marker
         VectorOps.committedCellAppendAuto(assigned(trainPop), idxDir, -1L,
           nlist = k)
         streamHeldOut(s, d, "s25") { (batch, bid) =>
@@ -1503,12 +1404,11 @@ object SimilarityQueries extends QueryPack {
       },
       Some(duckIvfHierTopkOn("vec_id % 4 <> 3"))),
 
-    // ---- BUCKETED-CELL store layout (s26): the 100 TB fix for the
-    // `cell=<id>` directory-per-cell scheme every earlier IVF store
-    // uses — one directory per cell walls at ~10⁵ cells (filesystem /
-    // object-store metadata), far below the k ≈ 10¹⁰ the dist tier
-    // computes and below a 100 TB corpus at the gated k = n/100
-    // policy. Here the partition key is cell_bucket = cell % B (B
+    // ---- BUCKETED-CELL store with an explicit B (s26): a directory
+    // per cell would wall at ~10⁵ cells (filesystem / object-store
+    // metadata), far below the k ≈ 10¹⁰ the dist tier computes and
+    // below a 100 TB corpus at the gated k = n/100 policy. The
+    // partition key is cell_bucket = cell % B (B
     // recorded once in the store's __layout marker — the banded
     // index's contract) and `cell` rides as a cell-sorted DATA column:
     // directories per generation are bounded by B no matter how many
@@ -1538,118 +1438,129 @@ object SimilarityQueries extends QueryPack {
       },
       Some(duckIvfHierTopkOn("TRUE"))),
 
-    // ---- Frozen-codebook APPEND on the bucketed layout (s27): s14's
-    // maintenance story re-run on the B-bounded store — the landing
-    // batch assigns under the frozen codebook and publishes as its own
-    // generation of ≤ B cell-sorted files (one bucketed shuffle of the
-    // BATCH, never the corpus). Serve must see both generations
-    // through the bucket prune + row-group cell skip; ORACLE IS
-    // s13/s14's VERBATIM.
+    // ---- s14's frozen-codebook APPEND with an explicit B = 16 (s27):
+    // the landing batch publishes as its own generation of ≤ B
+    // cell-sorted files (one bucketed shuffle of the BATCH, never the
+    // corpus). ORACLE IS s13/s14's VERBATIM.
     Q("s27_ivf_bucketed_append",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        def assigned(df: DataFrame) =
-          df.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-        val idxDir = Scratch.dir("graft_s27_").resolve("ivf").toString
-        VectorOps.committedBucketedCellAppend(
-          assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L, buckets = 16)
-        VectorOps.committedBucketedCellAppend(
-          assigned(e.where(col("vec_id") % 4 === 3)), idxDir, 0L, buckets = 16)
-        serveTopkFromIndex(s, idxDir, cents, e)
-      },
+      (s, d) => appendServe(s, d, "s27", bucketed16),
       Some(duckIvfTrainedTopk)),
 
-    // ---- Takedown on the bucketed layout (s28): s17's CRUD face with
-    // the bucket contract held through the rewrite — fold + filter in
-    // one swap, rows re-clustered (cell_bucket, cell) so the serve's
-    // row-group skip survives the fold. Codebook frozen; every query's
-    // top-5 back-fills from surviving in-cell neighbors; ORACLE IS
-    // s17's VERBATIM (restricted-population restatement).
+    // ---- s17's takedown with an explicit B = 16 (s28): fold + filter
+    // in one swap, rows re-clustered (cell_bucket, cell) so the serve's
+    // row-group skip survives the fold. ORACLE IS s17's VERBATIM.
     Q("s28_ivf_bucketed_delete",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        val idxDir = Scratch.dir("graft_s28_").resolve("ivf").toString
-        VectorOps.committedBucketedCellAppend(
-          e.withColumn("cell",
-            VectorOps.ivfAssignUdf(cents)(col("v"), col("nn"))),
-          idxDir, -1L, buckets = 16)
-        VectorOps.deleteFromBucketedCells(s, idxDir,
-          df => df.where(col("vec_id") % 9 =!= 0))
-        serveTopkFromIndex(s, idxDir, cents, e)
-      },
+      (s, d) => deleteServe(s, d, "s28", bucketed16),
       Some(duckIvfTrainedTopkOn("vec_id % 9 <> 0"))),
 
-    // ---- AS-OF + compaction horizon on the bucketed layout (s29):
-    // s18's time-travel square — three landings, the batch-0 snapshot
-    // served through the same bucket-pruned scan with gen ≤ 0 as a
-    // second static prune; after compactBucketedCells (fold preserves
-    // bucket layout AND cell sort) the pre-horizon snapshot must
-    // refuse loudly while the at-head snapshot equals the current
-    // serve. ORACLE IS s18's VERBATIM.
+    // ---- s18's as-of + compaction horizon with an explicit B = 16
+    // (s29). ORACLE IS s18's VERBATIM.
     Q("s29_ivf_bucketed_asof",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        def assigned(df: DataFrame) =
-          df.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-        val base = Scratch.dir("graft_s29_")
-        val idxDir = base.resolve("ivf").toString
-        VectorOps.committedBucketedCellAppend(
-          assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L, buckets = 16)
-        VectorOps.committedBucketedCellAppend(
-          assigned(e.where(col("vec_id") % 8 === 3)), idxDir, 0L, buckets = 16)
-        VectorOps.committedBucketedCellAppend(
-          assigned(e.where(col("vec_id") % 8 === 7)), idxDir, 1L, buckets = 16)
-        val matDir = base.resolve("asof0").toString
-        serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(0L)).write.parquet(matDir)
-        VectorOps.compactBucketedCells(s, idxDir)
-        val loud =
-          try {
-            serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(0L))
-            false
-          } catch { case _: IllegalStateException => true }
-        val atHead = serveTopkFromIndex(s, idxDir, cents, e,
-          asOf = Some(1L)).collect().toSet
-        val current = serveTopkFromIndex(s, idxDir, cents, e).collect().toSet
-        s.read.parquet(matDir)
-          .withColumn("asof_contract", lit(loud && atHead == current))
-      },
+      (s, d) => asofServe(s, d, "s29", bucketed16),
       Some(s"""SELECT q.*, TRUE AS asof_contract FROM (
               ${duckIvfTrainedTopkOn("vec_id % 4 <> 3 OR vec_id % 8 = 3")}) q""")),
 
-    // ---- STREAMED maintenance on the bucketed layout (s30): closes
-    // the lifecycle symmetry — every store contract so far (flat s16,
-    // two-level s21, dist s25) has a streamed face, and the layout
-    // that actually survives 100 TB must too. The held-out quarter
-    // arrives as a real stream; each micro-batch assigns under the
-    // frozen codebook and publishes via committedBucketedCellAppend —
-    // one bucket shuffle of the BATCH per landing (≤ B cell-sorted
-    // files per generation), exactly-once by batchId exactly like the
-    // flat face (the gen-dir rename discipline is layout-blind).
-    // Serve = the bucketed bucket-prune + row-group-skip read over
-    // all generations; ORACLE IS s13/s14/s16's VERBATIM — stream,
-    // batching, and layout all invisible to the hash.
+    // ---- s16's streamed maintenance with an explicit B = 16 (s30):
+    // each micro-batch publishes via committedBucketedCellAppend,
+    // exactly-once by batchId. ORACLE IS s13/s14/s16's VERBATIM —
+    // stream, batching, and writer entry all invisible to the hash.
     Q("s30_stream_ivf_bucketed",
-      (s, d) => {
-        val e = vecs(s, d)
-        val cents = withNorms(trainedCodebook(s, d))
-        def assigned(df: DataFrame) =
-          df.withColumn("cell", VectorOps.ivfAssignUdf(cents)(col("v"), col("nn")))
-        val idxDir = Scratch.dir("graft_s30_").resolve("ivf").toString
-        VectorOps.committedBucketedCellAppend(
-          assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L, buckets = 16)
-        streamHeldOut(s, d, "s30") { (batch, bid) =>
-          VectorOps.committedBucketedCellAppend(
-            assigned(VectorOps.vecs(batch)
-              .select("vec_id", "label", "v", "nn")), idxDir, bid, buckets = 16)
-          ()
-        }
-        serveTopkFromIndex(s, idxDir, cents, e)
-      },
+      (s, d) => streamServe(s, d, "s30", bucketed16),
       Some(duckIvfTrainedTopk)),
   )
+
+  /** How a frozen-codebook gate writes its cell store: (assigned rows,
+    * store dir, batchId) → published. s13-s18 go through the writer
+    * search_serve uses (B from the trained codebook's nlist), their
+    * s27-s30 twins through an explicit B = 16.
+    */
+  private type CellWriter = (DataFrame, String, Long) => Boolean
+
+  private val autoWriter: CellWriter =
+    VectorOps.committedCellAppendAuto(_, _, _, trainedNlist)
+
+  private val bucketed16: CellWriter =
+    VectorOps.committedBucketedCellAppend(_, _, _, 16)
+
+  /** The corpus, the trained codebook with norms, and its frozen cell
+    * assignment — the inputs of every s13-s18/s27-s30 store.
+    */
+  private def frozenAssign(s: SparkSession, d: String)
+      : (DataFrame, Seq[(Long, Array[Double], Double)], DataFrame => DataFrame) = {
+    val cents = withNorms(trainedCodebook(s, d))
+    val assign = VectorOps.ivfAssignUdf(cents)
+    (vecs(s, d), cents, _.withColumn("cell", assign(col("v"), col("nn"))))
+  }
+
+  /** s14/s27: the original 3/4 as gen=-1, the held-out quarter
+    * appended as gen=0, served over both.
+    */
+  private def appendServe(s: SparkSession, d: String, tag: String,
+                          write: CellWriter): DataFrame = {
+    val (e, cents, assigned) = frozenAssign(s, d)
+    val idxDir = Scratch.dir(s"graft_${tag}_").resolve("ivf").toString
+    write(assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L)
+    write(assigned(e.where(col("vec_id") % 4 === 3)), idxDir, 0L)
+    serveTopkFromIndex(s, idxDir, cents, e)
+  }
+
+  /** s16/s30: the original 3/4 as gen=-1, the held-out quarter as two
+    * streamed landings ([[streamHeldOut]]), served over all three.
+    */
+  private def streamServe(s: SparkSession, d: String, tag: String,
+                          write: CellWriter): DataFrame = {
+    val (e, cents, assigned) = frozenAssign(s, d)
+    val idxDir = Scratch.dir(s"graft_${tag}_").resolve("ivf").toString
+    write(assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L)
+    streamHeldOut(s, d, tag) { (batch, bid) =>
+      write(assigned(VectorOps.vecs(batch)
+        .select("vec_id", "label", "v", "nn")), idxDir, bid)
+      ()
+    }
+    serveTopkFromIndex(s, idxDir, cents, e)
+  }
+
+  /** s17/s28: the whole corpus as gen=-1, then every vec_id % 9 = 0
+    * deleted by one fold + filter swap.
+    */
+  private def deleteServe(s: SparkSession, d: String, tag: String,
+                          write: CellWriter): DataFrame = {
+    val (e, cents, assigned) = frozenAssign(s, d)
+    val idxDir = Scratch.dir(s"graft_${tag}_").resolve("ivf").toString
+    write(assigned(e), idxDir, -1L)
+    VectorOps.deleteFromBucketedCells(s, idxDir,
+      df => df.where(col("vec_id") % 9 =!= 0))
+    serveTopkFromIndex(s, idxDir, cents, e)
+  }
+
+  /** s18/s29: three landings, the batch-0 snapshot materialized, then
+    * the fold; `asof_contract` holds when the pre-horizon snapshot
+    * refuses and the at-head snapshot equals the current serve.
+    */
+  private def asofServe(s: SparkSession, d: String, tag: String,
+                        write: CellWriter): DataFrame = {
+    val (e, cents, assigned) = frozenAssign(s, d)
+    val base = Scratch.dir(s"graft_${tag}_")
+    val idxDir = base.resolve("ivf").toString
+    write(assigned(e.where(col("vec_id") % 4 =!= 3)), idxDir, -1L)
+    write(assigned(e.where(col("vec_id") % 8 === 3)), idxDir, 0L)
+    write(assigned(e.where(col("vec_id") % 8 === 7)), idxDir, 1L)
+    // materialize the snapshot BEFORE compaction — the serve is lazy
+    // and compaction rewrites the very dirs it reads
+    val matDir = base.resolve("asof0").toString
+    serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(0L)).write.parquet(matDir)
+    VectorOps.compactBucketedCells(s, idxDir)
+    val loud =
+      try {
+        serveTopkFromIndex(s, idxDir, cents, e, asOf = Some(0L))
+        false
+      } catch { case _: IllegalStateException => true }
+    val atHead = serveTopkFromIndex(s, idxDir, cents, e,
+      asOf = Some(1L)).collect().toSet
+    val current = serveTopkFromIndex(s, idxDir, cents, e).collect().toSet
+    s.read.parquet(matDir)
+      .withColumn("asof_contract", lit(loud && atHead == current))
+  }
 
   /** ONE copy of s21/s22's streamed two-level store construction (the
     * serveTopkFromIndex discipline: gates differ only in how they READ
@@ -1658,7 +1569,8 @@ object SimilarityQueries extends QueryPack {
     * FREEZE; the backfill lands as gen=-1; the held-out quarter
     * arrives as a real stream in two landings (vec_id % 8 = 3, then
     * % 8 = 7), each micro-batch assigned coarse→in-cell by the frozen
-    * two-level UDF and published exactly-once via committedCellAppend.
+    * two-level UDF and published exactly-once via
+    * committedCellAppendAuto into the bucketed store the backfill laid out.
     * Returns (idxDir, coarse, fine, corpus).
     */
   private def buildHierStreamedStore(s: SparkSession, d: String, tag: String)
@@ -1676,9 +1588,8 @@ object SimilarityQueries extends QueryPack {
     def assigned(df: DataFrame) =
       df.withColumn("cell", assignUdf(col("v"), col("nn")))
     val idxDir = Scratch.dir(s"graft_${tag}_").resolve("ivf").toString
-    // scaled-nlist tier → the DEFAULT (bucketed) store via the auto
-    // dispatch; the backfill fixes B, streamed landings follow the
-    // marker (r13 directive 1 — the flat layout is the walled one)
+    // the backfill fixes B from the corpus-scaled nlist, streamed
+    // landings follow the marker
     VectorOps.committedCellAppendAuto(assigned(trainPop), idxDir, -1L,
       nlist = k)
     streamHeldOut(s, d, tag) { (batch, bid) =>
@@ -1690,7 +1601,8 @@ object SimilarityQueries extends QueryPack {
     (idxDir, coarse, fine, e)
   }
 
-  /** ONE copy of the held-out-quarter streaming scaffold (s21/s22/s25):
+  /** ONE copy of the held-out-quarter streaming scaffold
+    * (s16/s21/s22/s25/s30):
     * vec_id % 8 = 3 lands first, a real parquet-source stream drives
     * `ingest` through foreachBatch, then % 8 = 7 lands as the second
     * micro-batch. `ingest` receives the RAW batch rows and the real

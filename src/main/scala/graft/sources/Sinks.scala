@@ -626,9 +626,9 @@ object Sinks {
     * half-write is invisible (hidden tmp). Readers go through
     * [[readGenerations]], which resolves only the probed
     * `<partitionCol>=` dirs of every visible generation. The commit
-    * discipline behind the streaming
-    * IVF maintenance (s16, via VectorOps.committedCellAppend) and the
-    * bucketed band index (d16).
+    * discipline behind the IVF cell store
+    * (VectorOps.committedBucketedCellAppend) and the bucketed band
+    * index (d16).
     *
     * Returns true when this call published the generation, false when
     * `batchId` was already committed (the replay skip) — callers
@@ -871,9 +871,9 @@ object Sinks {
     readMarkerLines(fs, p).head.trim.toInt
   }
 
-  /** The marker's bucket count, or None for an unmarked (flat-laid-out
-    * or brand-new) store — the layout-dispatch probe readers and the
-    * auto-dispatching writers share.
+  /** The marker's bucket count, or None for a store no bucketed
+    * writer has touched yet — the IVF store writer's first-write probe
+    * (VectorOps.committedCellAppendAuto).
     */
   def layoutMarkerOpt(fs: org.apache.hadoop.fs.FileSystem,
                       indexDir: String): Option[Int] =

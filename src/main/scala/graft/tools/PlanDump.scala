@@ -45,7 +45,7 @@ object PlanDump {
       "d22_index_delete" -> "store lifecycle; probe shape pinned in IncrementalDedupSpec",
       "d23_keeplist_asof" -> "store lifecycle; as-of prune shape shared with t32's dumped plan",
       "d29_keeplist_burst_fold" -> "fold-burst lifecycle; read shape shared with d31's dumped plan",
-      "s17_ivf_delete" -> "store lifecycle; pruned-serve shape shared with s13's dumped plan")
+      "s17_ivf_delete" -> "store lifecycle; pruned-serve scan shape in the bucketed-cell serve scan section")
     (streaming ++ lifecycle).toMap
   }
 
@@ -110,8 +110,9 @@ object PlanDump {
       // broadcast of the batch side over the index scan — no corpus
       // shuffle — is pinned on incrementalVerdictPlan in
       // IncrementalDedupSpec),
-      // s13 persisted-IVF serve (the index scan must carry
-      // PartitionFilters on cell — only probed directories read), t24
+      // s13 persisted-IVF serve (the gate returns its materialized
+      // top-k, so the dump is that frame; the index scan's bucket
+      // PartitionFilters are in the bucketed-cell serve scan section), t24
       // budget selection (every Window keyed on __pid — the prefix sum
       // never funnels data through one task), a24 mergeable-histogram
       // quantiles (partial-agg bin counters; windows only over the
@@ -185,8 +186,8 @@ object PlanDump {
       // round-12: the two-level lifecycle closers the round-11 regen
       // missed (s22's as-of reads from the materialized snapshot —
       // the interesting prune ran pre-materialization and matches
-      // s21's; s23's takedown serve must keep s13's PartitionFilters
-      // on the rewritten store)
+      // s21's; s23's takedown serve returns its materialized top-k,
+      // its scan shape is the bucketed-cell serve scan section's)
       "s22_ivf_hier_asof", "s23_ivf_hier_delete",
       // round-12: the centroids-as-DataFrame tier — d34/s24 must show
       // the coarse-route equi-join + per-vector window argmin with NO
@@ -350,7 +351,7 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
-    // the bucketed-cell store's serve scan (s26–s29): the partition
+    // the cell store's serve scan (every IVF store, s13–s30): the partition
     // prune must be on cell_bucket (bounded by B regardless of cell
     // count) with the probed-cell list PUSHED into the parquet scan
     // as In(cell, ...) — the row-group skip over the cell-sorted
@@ -367,7 +368,7 @@ object PlanDump {
       val served = spark.read.parquet(dir)
         .where(col("cell_bucket").isin(3))
         .where(col("cell").isin(3L, 11L))
-      sb.append("\n## bucketed-cell serve scan (s26–s29 store layout)\n\n```\n")
+      sb.append("\n## bucketed-cell serve scan (s13–s30 store layout)\n\n```\n")
       sb.append(normalize(served.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")

@@ -4,17 +4,17 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.VectorOps
 
-/** The bucketed-cell IVF store layout (s26–s29): `cell_bucket =
-  * cell % B` is the PARTITION key and `cell` a cell-sorted DATA column,
-  * so directory count is bounded by B no matter how many cells exist —
-  * the 100 TB replacement for the `cell=<id>` directory-per-cell
-  * scheme that walls at ~10⁵ cells. These tests pin the two-level
+/** The IVF cell store layout (s13–s30): `cell_bucket = cell % B` is
+  * the PARTITION key and `cell` a cell-sorted DATA column, so directory
+  * count is bounded by B no matter how many cells exist — a directory
+  * per cell walls at ~10⁵ cells. These tests pin the two-level
   * prune from the EXECUTED plan (bucket partition prune + pushed
   * In(cell) filter), the cell-sort write contract that makes the
   * pushed filter a row-group min/max skip at production row-group
-  * counts, the layout-marker contract, the fold's layout preservation,
-  * and layout invisibility in served results (s26 == s20's oracle
-  * family; same DuckDB hashes in CORRECTNESS).
+  * counts, the layout-marker contract (an unmarked store refuses to
+  * serve), the fold's layout preservation, and writer invisibility in
+  * served results (s26 == s20's oracle family; same DuckDB hashes in
+  * CORRECTNESS).
   */
 class BucketedIvfSpec extends SparkSpec {
 
@@ -31,7 +31,7 @@ class BucketedIvfSpec extends SparkSpec {
     import spark.implicits._
     val dir = Scratch.dir("bivf_prune_").resolve("ivf").toString
     synthStore(dir, cells = 200, buckets = 8)
-    // 200 cells would be 200 directories under the flat layout; here
+    // 200 cells would be 200 directories at one dir per cell; here
     // the generation holds at most B=8 bucket dirs
     val bucketDirs = new java.io.File(s"$dir/gen=-1").listFiles
       .filter(_.isDirectory).map(_.getName).toSet
@@ -121,14 +121,15 @@ class BucketedIvfSpec extends SparkSpec {
     assert(after.columns.contains("cell_bucket"))
   }
 
-  test("auto-dispatch (r14 directive 1): the DEFAULT store is bucketed; " +
-       "flat is an explicit fixed-nlist opt-in bounded by FlatLayoutMaxCells") {
+  test("auto writer (r14 directive 1): a new store is bucketed at " +
+       "defaultBuckets(nlist); an existing marker's B wins; delete keeps " +
+       "the bucket layout") {
     import spark.implicits._
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     def rows(n: Int) = (0 until n).map(i => (i.toLong, (i % 7).toLong))
       .toDF("vec_id", "cell")
-    // default call → bucketed layout with defaultBuckets(nlist), marker
+    // first write → bucketed layout with defaultBuckets(nlist), marker
     val dirB = Scratch.dir("bivf_auto_b_").resolve("ivf").toString
     VectorOps.committedCellAppendAuto(rows(70), dirB, -1L, nlist = 7)
     assert(graft.sources.Sinks.layoutMarkerOpt(fs, dirB) ===
@@ -138,30 +139,20 @@ class BucketedIvfSpec extends SparkSpec {
     assert(graft.sources.Sinks.readLayoutMarker(fs, dirB) ===
       VectorOps.defaultBuckets(7))
     assert(spark.read.parquet(dirB).count() === 80)
-    // explicit fixed-nlist opt-in below the bound → flat (no marker,
-    // cell=<id> partition dirs)
-    val dirF = Scratch.dir("bivf_auto_f_").resolve("ivf").toString
-    VectorOps.committedCellAppendAuto(rows(70), dirF, -1L, nlist = 7,
-      fixedNlist = true)
-    assert(graft.sources.Sinks.layoutMarkerOpt(fs, dirF).isEmpty)
-    assert(new java.io.File(s"$dirF/gen=-1").listFiles
-      .exists(_.getName.startsWith("cell=")))
-    // the opt-in REFUSES above the bound — a user at scale cannot
-    // plant the walled layout
-    val err = intercept[IllegalArgumentException] {
-      VectorOps.committedCellAppendAuto(rows(10),
-        Scratch.dir("bivf_auto_x_").resolve("ivf").toString, -1L,
-        nlist = 100000, fixedNlist = true)
-    }
-    assert(err.getMessage.contains("flat"))
-    // layout-aware CRUD dispatches on the marker for both layouts
-    VectorOps.deleteFromCells(spark, dirB, df => df.where(col("vec_id") % 2 === 0))
+    VectorOps.deleteFromBucketedCells(spark, dirB, df => df.where(col("vec_id") % 2 === 0))
     assert(spark.read.parquet(dirB).count() === 40)
     assert(spark.read.parquet(dirB).columns.contains("cell_bucket"))
-    VectorOps.compactCells(spark, dirF)
-    assert(spark.read.parquet(dirF).count() === 70)
-    assert(new java.io.File(dirF).listFiles.filter(_.isDirectory)
-      .map(_.getName).toSet === Set("gen=-1"))
+  }
+
+  test("the serve scan refuses an unmarked gen=-1/cell=<id> store") {
+    import spark.implicits._
+    val dir = Scratch.dir("bivf_unmarked_").resolve("ivf").toString
+    (0L until 20L).map(i => (i, i % 4)).toDF("vec_id", "cell")
+      .write.partitionBy("cell").parquet(s"$dir/gen=-1")
+    val err = intercept[IllegalStateException] {
+      VectorOps.prunedCellScanFromFrame(spark, dir, Seq(1L).toDF("cell"))
+    }
+    assert(err.getMessage.contains("no layout marker"), err.getMessage)
   }
 
   test("probed-cell size dispatch (r14 directive 2): literal In up to " +
@@ -237,7 +228,7 @@ class BucketedIvfSpec extends SparkSpec {
        "bucketed store: static bucket PartitionFilters + pushed cell filter") {
     import spark.implicits._
     // the store exactly as the dist stream gates write it: the auto
-    // dispatch at a corpus-scaled nlist
+    // writer at a corpus-scaled nlist
     val dir = Scratch.dir("bivf_dist_").resolve("ivf").toString
     val df = (0 until 600).map(i => (i.toLong, (i % 150).toLong))
       .toDF("vec_id", "cell")
@@ -292,13 +283,13 @@ class BucketedIvfSpec extends SparkSpec {
     assert(big.collect().map(_.toSeq).toSet === wholeStore(many))
   }
 
-  test("the bucketed serve equals the flat serve (layout invisible in " +
-       "results): s27 == s14, s26 family == s24") {
+  test("the explicit-B serve equals the auto-writer serve (writer " +
+       "invisible in results): s27 == s14, s26 family == s24") {
     val bucketed = graft.SparkEntry.queries("s27_ivf_bucketed_append")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    val flat = graft.SparkEntry.queries("s14_ivf_index_append")(spark, sfDir)
+    val auto = graft.SparkEntry.queries("s14_ivf_index_append")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    assert(bucketed === flat)
+    assert(bucketed === auto)
     assert(bucketed.nonEmpty)
     val bHier = graft.SparkEntry.queries("s26_ivf_bucketed_served")(spark, sfDir)
       .collect().map(_.toSeq).toSet
@@ -307,12 +298,12 @@ class BucketedIvfSpec extends SparkSpec {
     assert(bHier === dHier)
     assert(bHier.nonEmpty)
     // the streamed faces must agree the same way (s30 == s16: same
-    // stream, same frozen codebook, only the store layout differs)
+    // stream, same frozen codebook, only the writer entry differs)
     val bStream = graft.SparkEntry.queries("s30_stream_ivf_bucketed")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    val fStream = graft.SparkEntry.queries("s16_stream_ivf_append")(spark, sfDir)
+    val aStream = graft.SparkEntry.queries("s16_stream_ivf_append")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    assert(bStream === fStream)
+    assert(bStream === aStream)
     assert(bStream.nonEmpty)
   }
 }

@@ -3,10 +3,12 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** s13's persisted IVF index: the cell-partitioned parquet layout must
-  * partition-prune to the probed cells (the inverted-file contract —
-  * unprobed corpus is never listed or read), and serving from the
-  * persisted index must reproduce the in-memory s9 serve exactly.
+/** s13's persisted IVF index: Spark's partition discovery must prune
+  * a partitioned parquet layout to the probed directories, across
+  * generations too (the inverted-file contract — unprobed corpus is
+  * never listed or read); the committed cell-store append must make a
+  * replay a pure skip; and serving from the persisted index must
+  * reproduce the in-memory s9 serve exactly.
   */
 class IvfIndexSpec extends SparkSpec {
 
@@ -65,30 +67,34 @@ class IvfIndexSpec extends SparkSpec {
     assert(cells === Set("cell=0", "cell=1"))
   }
 
-  test("committedCellAppend: replayed batchIds are pure skips; crashed tmp is invisible") {
+  test("committedBucketedCellAppend: replayed batchIds are pure skips; crashed tmp is invisible") {
     import spark.implicits._
     import graft.operators.VectorOps
     val dir = Scratch.dir("ivf_gen_").resolve("ivf").toString
-    def gen(ids: Range) = ids.map(i => (i.toLong, (i % 3))).toDF("vec_id", "cell")
-    VectorOps.committedCellAppend(gen(0 until 12), dir, -1L)
-    VectorOps.committedCellAppend(gen(100 until 106), dir, 0L)
+    def gen(ids: Range) = ids.map(i => (i.toLong, (i % 3).toLong)).toDF("vec_id", "cell")
+    def append(ids: Range, batchId: Long) =
+      VectorOps.committedBucketedCellAppend(gen(ids), dir, batchId, 4)
+    assert(append(0 until 12, -1L))
+    assert(append(100 until 106, 0L))
     assert(spark.read.parquet(dir).count() === 18)
     // at-least-once REPLAY of batch 0 (different rows — must be ignored,
     // the generation is already committed)
-    VectorOps.committedCellAppend(gen(200 until 220), dir, 0L)
+    assert(!append(200 until 220, 0L))
     assert(spark.read.parquet(dir).count() === 18,
       "a replayed batchId must not double-ingest")
     // a crashed half-write (hidden tmp left behind) is invisible to
     // readers and to partition discovery
-    gen(900 until 910).write.partitionBy("cell").parquet(s"$dir/.tmp_gen_7")
+    gen(900 until 910).withColumn("cell_bucket", (col("cell") % 4).cast("int"))
+      .write.partitionBy("cell_bucket").parquet(s"$dir/.tmp_gen_7")
     assert(spark.read.parquet(dir).count() === 18)
-    // cell pruning still prunes across generations (input_file_name is
-    // execution-time truth; inputFiles is the pre-pruning listing)
-    val prunedFiles = spark.read.parquet(dir).where(col("cell") === 1)
+    // the cell prune is a bucket prune across generations
+    // (input_file_name is execution-time truth; inputFiles is the
+    // pre-pruning listing)
+    val prunedFiles = spark.read.parquet(dir).where(col("cell_bucket") === 1)
       .select(input_file_name().as("f")).distinct().as[String].collect()
-    assert(prunedFiles.nonEmpty && prunedFiles.forall(_.contains("cell=1")))
+    assert(prunedFiles.nonEmpty && prunedFiles.forall(_.contains("cell_bucket=1")))
     // and the next real batch commits normally
-    VectorOps.committedCellAppend(gen(300 until 303), dir, 1L)
+    assert(append(300 until 303, 1L))
     assert(spark.read.parquet(dir).count() === 21)
   }
 
